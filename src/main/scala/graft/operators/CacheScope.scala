@@ -41,10 +41,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * checkpoint's blocks were already lost on executor death, so release
   * narrows nothing: recompute-after-loss failed before and after.
   *
-  * Driver-side and per-thread (plans are built single-threaded on the
-  * driver); scopes nest — an inner `collect` hides the outer one, so an
-  * operator composed inside another scoped pipeline cleans up at the
-  * innermost boundary that owns materialization.
+  * Driver-side and per-thread; scopes nest — an inner `collect` hides
+  * the outer one, so an operator composed inside another scoped pipeline
+  * cleans up at the innermost boundary that owns materialization.
+  * [[Par.all]] carries the calling thread's scope into its bodies
+  * ([[current]] / [[within]]), so the buffers are synchronized.
   */
 private[graft] object CacheScope {
 
@@ -57,17 +58,33 @@ private[graft] object CacheScope {
     }
   }
 
-  private final class Bufs {
-    val dfs = new java.util.ArrayList[DataFrame]
-    val rdds = new java.util.ArrayList[RDD[_]]
+  /** One scope's buffers; shared by the threads [[Par.all]] spawns. */
+  final class Bufs private[CacheScope] {
+    private val dfs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    private[CacheScope] def add(df: DataFrame): Unit = synchronized(dfs += df)
+    private[CacheScope] def add(rdd: RDD[_]): Unit = synchronized(rdds += rdd)
+    private[CacheScope] def captured: Captured =
+      synchronized(new Captured(dfs.toList, rdds.toList))
   }
 
   private val active = new ThreadLocal[Bufs]
 
+  /** The calling thread's scope (null outside any) — for [[within]]. */
+  private[operators] def current: Bufs = active.get()
+
+  /** Run `body` on this thread inside `scope` (as captured by [[current]]
+    * on another thread), restoring this thread's own scope after. */
+  private[operators] def within[A](scope: Bufs)(body: => A): A = {
+    val prev = active.get()
+    active.set(scope)
+    try body finally active.set(prev)
+  }
+
   /** Operators: route a just-persisted intermediate through here. */
   private[graft] def register(df: DataFrame): DataFrame = {
     val buf = active.get()
-    if (buf != null) buf.dfs.add(df)
+    if (buf != null) buf.add(df)
     df
   }
 
@@ -89,7 +106,7 @@ private[graft] object CacheScope {
     * ContextCleaner. */
   private[graft] def registerCheckpoint[T](ds: Dataset[T]): Dataset[T] = {
     val buf = active.get()
-    if (buf != null) checkpointBlocksOf(ds).foreach(buf.rdds.add)
+    if (buf != null) checkpointBlocksOf(ds).foreach(r => buf.add(r))
     ds
   }
 
@@ -103,17 +120,8 @@ private[graft] object CacheScope {
     * opens no scope, so `register` was a no-op there and a rolling
     * crawl accumulated two cached relations per batch without bound). */
   private[graft] def scoped[A](body: => A): A = {
-    val prev = active.get()
     val buf = new Bufs
-    active.set(buf)
-    try body
-    finally {
-      active.set(prev)
-      Seq.tabulate(buf.dfs.size())(buf.dfs.get)
-        .foreach(_.unpersist(blocking = false))
-      Seq.tabulate(buf.rdds.size())(buf.rdds.get)
-        .foreach(_.unpersist(blocking = false))
-    }
+    try within(buf)(body) finally buf.captured.release()
   }
 
   /** Pipelines: run `body` with a fresh scope; returns (result, captured
@@ -122,15 +130,8 @@ private[graft] object CacheScope {
     * forfeits reuse, for checkpoint blocks it would break the result's
     * remaining lineage. */
   private[graft] def collect[A](body: => A): (A, Captured) = {
-    val prev = active.get()
     val buf = new Bufs
-    active.set(buf)
-    try {
-      val a = body
-      val captured = new Captured(
-        Seq.tabulate(buf.dfs.size())(buf.dfs.get),
-        Seq.tabulate(buf.rdds.size())(buf.rdds.get))
-      (a, captured)
-    } finally active.set(prev)
+    val a = within(buf)(body)
+    (a, buf.captured)
   }
 }

@@ -1766,36 +1766,14 @@ object Dedup {
     *        pass Some(dir) on reliable storage (HDFS/object store): each
     *        round's labels are written to parquet under
     *        dir/cc-<uuid>/round_N and read back, so the lineage cut
-    *        replays from files after executor loss. Implemented WITHOUT
-    *        SparkContext.setCheckpointDir — that call appends a fresh
-    *        UUID subdirectory to whatever it's given, so a set/restore
-    *        dance would nest the session's checkpoint dir one level
-    *        deeper on every invocation; parquet round-trips give the
-    *        same durability with zero session-global mutation. The round
-    *        files outlive the call (the returned frame reads the final
-    *        round — same as Spark's own reliable checkpoints); the
+    *        replays from files after executor loss ([[Iterate]]: one
+    *        tiny eager write job per round; the session checkpoint dir
+    *        is never touched). The round files outlive the call; the
     *        caller deletes dir once the result is consumed. */
   def connectedComponents(pairs: DataFrame, aCol: String = "a",
                           bCol: String = "b",
-                          checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsLoop(pairs, aCol, bCol,
-      checkpointDir.map(d => s"$d/cc-${java.util.UUID.randomUUID()}"))
-
-  private def connectedComponentsLoop(pairs: DataFrame, aCol: String,
-                                      bCol: String,
-                                      ckptDir: Option[String]): DataFrame = {
-    var ckptN = 0
-    def ckpt(df: DataFrame): DataFrame = ckptDir match {
-      case Some(dir) =>
-        // Eager by nature (one tiny write job per round — the same extra
-        // job an eager reliable checkpoint would cost); the local path
-        // below keeps the lazy one-job-per-round fusion.
-        val p = s"$dir/round_$ckptN"; ckptN += 1
-        df.write.parquet(p)
-        df.sparkSession.read.parquet(p)
-      case None =>
-        CacheScope.registerCheckpoint(df.localCheckpoint(eager = false))
-    }
+                          checkpointDir: Option[String] = None): DataFrame = {
+    val iterate = Iterate("cc", checkpointDir)
     // The pair input is often an expensive join/aggregate (q47 feeds the
     // full n-gram Jaccard pipeline in here). It is read twice by the
     // symmetrization union — persist the directed edges so the input plan
@@ -1812,7 +1790,7 @@ object Dedup {
     // shuffle on a corpus — with no scale-unsafe hint and without paying
     // an AQE stage round-trip per join per round.
     var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("rep", col("id")).transform(ckpt).persist()
+      .withColumn("rep", col("id")).transform(iterate.cut).persist()
     // Self-loops folded into the edge list ONCE: with (x, x) present for
     // every node, the per-round "min over neighbors' reps" aggregate
     // already includes the node's own rep — the hop is a single
@@ -1874,7 +1852,7 @@ object Dedup {
             col("h.rep") === col("__rid"), "left")
           .select(col("h.id").as("id"),
             coalesce(col("__rrep"), col("h.rep")).as("rep"))
-      val next = ckpt(jumped).persist()
+      val next = iterate.cut(jumped).persist()
       val prev = labels
       labels = next
       val s = repSum(labels) // materializes checkpoint + cache in one job
@@ -2273,22 +2251,6 @@ object Dedup {
     } else None
   }
 
-  /** The session's configured full exchange width — the width the
-    * session operator (bench, a cluster deployment) sized for its data
-    * and core count. Used as an EXPLICIT partition count on the
-    * CPU-bound exchanges (shingling, hashing, signature builds): AQE's
-    * partition coalescing prices an exchange by its compressed BYTES,
-    * and the narrow (id, text) or (id, hash64) relations these stages
-    * shuffle are tiny next to the per-row CPU behind them — measured at
-    * sf0.1, the whole split+explode+md5 pipeline of an index build ran
-    * in ONE coalesced task (2.6 s serial on a 32-core box) because its
-    * input exchange compressed below the 1 MB coalesce floor. A keyed
-    * `repartition(col)` is coalescible; `repartition(width, col)` is
-    * pinned. Scale-safe by construction: the value tracks exactly the
-    * knobs the session already sizes from data (initialPartitionNum
-    * when AQE is on, shuffle.partitions otherwise — the candidateWidth
-    * contract, ADVICE r12), so at ×100 it grows with the input instead
-    * of freezing at a local core count. */
   /** DATA-SIZED width for an iterative loop's cached relation. The
     * cached relation's partition count sets the width of every
     * per-round join/partial-aggregate stage downstream of it (those
@@ -2309,6 +2271,22 @@ object Dedup {
     (bytes / (4L << 20)).min(cap).max(1).toInt
   }
 
+  /** The session's configured full exchange width — the width the
+    * session operator (bench, a cluster deployment) sized for its data
+    * and core count. Used as an EXPLICIT partition count on the
+    * CPU-bound exchanges (shingling, hashing, signature builds): AQE's
+    * partition coalescing prices an exchange by its compressed BYTES,
+    * and the narrow (id, text) or (id, hash64) relations these stages
+    * shuffle are tiny next to the per-row CPU behind them — measured at
+    * sf0.1, the whole split+explode+md5 pipeline of an index build ran
+    * in ONE coalesced task (2.6 s serial on a 32-core box) because its
+    * input exchange compressed below the 1 MB coalesce floor. A keyed
+    * `repartition(col)` is coalescible; `repartition(width, col)` is
+    * pinned. Scale-safe by construction: the value tracks exactly the
+    * knobs the session already sizes from data (initialPartitionNum
+    * when AQE is on, shuffle.partitions otherwise — the candidateWidth
+    * contract, ADVICE r12), so at ×100 it grows with the input instead
+    * of freezing at a local core count. */
   private[operators] def sessionWidth(spark: SparkSession): Int = {
     val conf = spark.conf
     // initialPartitionNum only *means* anything when AQE is on (it is

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge relations (beyond the
@@ -11,6 +11,48 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   private def dataWidth(df: DataFrame): Int = Dedup.dataWidth(df)
+
+  /** Persist and register a relation the rounds read more than once. */
+  private def kept(df: DataFrame): DataFrame = CacheScope.register(
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** The loops' edge prelude: (src, dst) as strings, distinct, persisted
+    * — the caller's edge lineage (typically a full fact-table scan) runs
+    * once however many derived relations read it. `bySrc` repartitions
+    * on src before the persist, so the cached relation reports
+    * hashpartitioning(src) and each round's join against node-keyed
+    * state reshuffles only the node-sized side. */
+  private def edgeRel(edges: DataFrame, srcCol: String, dstCol: String,
+                      bySrc: Boolean = false): DataFrame = {
+    val e = edges.select(col(srcCol).cast("string").as("src"),
+      col(dstCol).cast("string").as("dst")).distinct()
+    kept(if (bySrc) e.repartition(col("src")) else e)
+  }
+
+  /** Every endpoint of an [[edgeRel]], persisted: the state's key set. */
+  private def nodesOf(e: DataFrame): DataFrame = kept(
+    e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
+
+  /** The nodes no edge points at: they never receive a vote or rank
+    * mass, so their state is fixed after round 1 — computed ONCE and
+    * UNIONed back each round (a union is plan-free) instead of a
+    * per-round left join against the node set. Every other node appears
+    * in the round's aggregate, so the union is exactly the missing rows;
+    * one join stage per round saved, results identical. */
+  private def noInEdges(e: DataFrame, nodes: DataFrame): DataFrame =
+    nodes.join(e.select(col("dst").as("node")).distinct(),
+      Seq("node"), "left_anti")
+
+  /** One row (a, b), a < b, per undirected edge: direction, duplicates
+    * and self-loops canonicalized away. */
+  private def undirectedEdges(edges: DataFrame, srcCol: String,
+                              dstCol: String): DataFrame = {
+    val s = col(srcCol).cast("string")
+    val d = col(dstCol).cast("string")
+    edges.select(least(s, d).as("a"), greatest(s, d).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
+  }
 
   /** PageRank over a directed edge relation, fixed iteration count.
     *
@@ -32,28 +74,102 @@ object Graph {
     * keyed on dst. Nothing driver-side but the node count; state never
     * exceeds one double per node.
     *
-    * Deep iteration counts: the rank relation's lineage is CUT every
-    * round on the in-memory path (a LAZY localCheckpoint — truncates
-    * the logical plan to a leaf with no additional pass; under AQE the
-    * round's shuffle stages materialize at the cut rather than at the
-    * caller's action, and `checkpointEvery` does NOT apply — ADVICE
-    * r17), or every `checkpointEvery` rounds through `checkpointDir`
-    * (parquet round-trip under dir/pr-<uuid>/round_N, replayable from
-    * files after executor loss; caller deletes the dir once consumed —
-    * exactly Dedup.connectedComponents' cadence; each cut there is an
-    * eager write job, hence the cadence). The in-memory path retains
-    * one node-sized checkpoint block set PER ROUND (MEMORY_AND_DISK,
-    * freed at scope release / bench sweep / ContextCleaner GC) —
-    * deep-iteration deployments that cannot afford that retention
-    * should pass `checkpointDir`. Without the cut the plan
-    * nests one join+aggregate per round and every action-side
-    * CacheManager canonicalization / AQE re-optimization / listener
-    * plan-string walks the whole tower — quadratic driver work that
-    * dominated wall time even at 3 rounds (q130/q108 ProfileQuery
-    * breakdowns, round 17). Rank VALUES are unaffected: the cut
-    * replays rounded doubles, and every round is rounded already
-    * (the determinism contract above).
+    * Deep iteration counts: the rank relation's lineage is cut EVERY
+    * round, the last included ([[Iterate]]'s one policy) — by a lazy
+    * localCheckpoint, or, with `checkpointDir`, by a parquet round-trip
+    * under dir/pr-<uuid>/round_N that replays from files after executor
+    * loss (one eager write job per round; the caller deletes the dir
+    * once the result is consumed). The plan stays one round deep at any
+    * iteration count. The in-memory path retains one node-sized
+    * checkpoint block set PER ROUND (MEMORY_AND_DISK, freed at scope
+    * release / bench sweep / ContextCleaner GC) — deep-iteration
+    * deployments that cannot afford that retention should pass
+    * `checkpointDir`. Rank VALUES are unaffected: the cut replays
+    * rounded doubles, and every round is rounded already (the
+    * determinism contract above).
     */
+  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
+               iters: Int, damping: Double = 0.85, roundTo: Int = 9,
+               checkpointDir: Option[String] = None): DataFrame = {
+    val e = edgeRel(edges, srcCol, dstCol)
+    // before the count: the width is sized from e's optimizer estimate
+    val ew = outDegreeEdges(e)
+    val nodes = nodesOf(e)
+    val n = nodes.count()
+    // 1/N is a single IEEE division — identical in any engine, no
+    // rounding needed on the initial state
+    rankLoop(e, ew, nodes, lit((1.0 - damping) / n), lit(1.0 / n), iters,
+      damping, roundTo, checkpointDir)
+  }
+
+  /** PERSONALIZED PageRank: teleport mass flows only to `seeds` instead
+    * of uniformly — rank becomes "importance relative to the seed set",
+    * the standard similar-items / recommendation primitive (random walk
+    * with restart). The [[pageRank]] loop, shape and determinism
+    * contract; differences: the teleport term is (1−d)/|S| on seeds and
+    * 0 elsewhere, and the initial state is the seed distribution.
+    * Non-seed nodes unreachable from the seeds correctly converge to
+    * rank 0. Seeds are a driver-side literal list (metadata-sized —
+    * anchor items, a user's history), compiled into an isin predicate,
+    * never a join. */
+  def personalizedPageRank(edges: DataFrame, srcCol: String,
+                           dstCol: String, seeds: Seq[String],
+                           iters: Int, damping: Double = 0.85,
+                           roundTo: Int = 9): DataFrame = {
+    require(seeds.nonEmpty, "personalization needs at least one seed")
+    val e = edgeRel(edges, srcCol, dstCol)
+    val seed = col("node").isin(seeds: _*)
+    // (1-d)/|S| as ONE driver-side double, matching the oracle's
+    // literal expression (1.0 - d) / |S| op-for-op
+    rankLoop(e, outDegreeEdges(e), nodesOf(e),
+      when(seed, lit((1.0 - damping) / seeds.size)).otherwise(lit(0.0)),
+      when(seed, lit(1.0 / seeds.size)).otherwise(lit(0.0)),
+      iters, damping, roundTo, None)
+  }
+
+  /** The rank loop's edge side: each edge with its source's out-degree,
+    * attached once, so each iteration pays ONE join (the rank state)
+    * instead of two and never re-aggregates the edges. The repartition
+    * on src sits BEFORE the persist so the cached relation reports
+    * hashpartitioning(src): every iteration's rank join then reshuffles
+    * only the node-sized rank state — the edge side (the m-sized one,
+    * the whole per-round cost at 100 TB) never transits a shuffle
+    * again. outdeg is derived from the same partitioning, so the degree
+    * join itself is exchange-free too. */
+  private def outDegreeEdges(e: DataFrame): DataFrame = kept(
+    // explicit data-sized width: AQE coalesces a keyed repartition(col)
+    // by its compressed bytes, so the cached relation came back
+    // hashpartitioning(src, 1-3) at ×10 scale and every per-round
+    // join/partial-agg stage — which scans this cache and cannot be
+    // re-split by AQE — ran its CPU on 1-3 cores (measured: 35.4 → 28.9
+    // s at sf1b from sizing the width; see dataWidth for the
+    // fixture-scale side of the trade)
+    e.repartition(dataWidth(e), col("src"))
+      .join(e.groupBy(col("src")).agg(count(lit(1)).as("__deg")), "src"))
+
+  /** The rank loop both PageRank forms share: rᵢ₊₁(v) =
+    * round(teleport(v) + d · Σ_{(u,v)∈E} rᵢ(u)/outdeg(u)), from r₀ =
+    * `init`. `teleport` and `init` are expressions over the `node`
+    * column. A node with no in-edges holds round(teleport) from round 1
+    * on ([[noInEdges]]). */
+  private def rankLoop(e: DataFrame, ew: DataFrame, nodes: DataFrame,
+                       teleport: Column, init: Column, iters: Int,
+                       damping: Double, roundTo: Int,
+                       checkpointDir: Option[String]): DataFrame = {
+    require(iters >= 0, "iters must be non-negative")
+    val zeroIn = kept(noInEdges(e, nodes)
+      .select(col("node"), round(teleport, roundTo).as("rank")))
+    Iterate("pr", checkpointDir)
+      .rounds(nodes.withColumn("rank", init), iters) { ranks =>
+        ew.join(ranks, ew("src") === ranks("node"))
+          .groupBy(col("dst").as("node"))
+          .agg(sum(col("rank") / col("__deg")).as("__in"))
+          .select(col("node"),
+            round(teleport + lit(damping) * col("__in"), roundTo).as("rank"))
+          .union(zeroIn)
+      }
+  }
+
   /** Exact triangle census over an undirected edge relation — node,
     * edge, wedge (length-2 path) and triangle counts plus the global
     * clustering coefficient 3·triangles / wedges, the graph-shape
@@ -79,12 +195,7 @@ object Graph {
     * wedges). */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String,
                     roundTo: Int = 6): DataFrame = {
-    val s = col(srcCol).cast("string")
-    val d = col(dstCol).cast("string")
-    val e = CacheScope.register(edges
-      .select(least(s, d).as("a"), greatest(s, d).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val e = kept(undirectedEdges(edges, srcCol, dstCol))
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("__d"))
@@ -93,10 +204,9 @@ object Graph {
       .join(deg.select(col("node").as("b"), col("__d").as("__db")), "b")
     val aFirst = col("__da") < col("__db") ||
       (col("__da") === col("__db") && col("a") < col("b"))
-    val oriented = CacheScope.register(withDeg
+    val oriented = kept(withDeg
       .select(when(aFirst, col("a")).otherwise(col("b")).as("u"),
-        when(aFirst, col("b")).otherwise(col("a")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        when(aFirst, col("b")).otherwise(col("a")).as("v")))
     val wedges = oriented.as("x")
       .join(oriented.as("y"),
         col("x.u") === col("y.u") && col("x.v") =!= col("y.v"))
@@ -134,72 +244,34 @@ object Graph {
     * Scale: per round one node-sized degree aggregate and two
     * semi-joins of the (shrinking) edge relation against the
     * (node-sized) survivor set. State never exceeds one long per node;
-    * the edge relation's lineage is cut every round exactly as
-    * [[pageRank]]'s in-memory path.
-    *
-    * `checkpointEvery` applies ONLY with `checkpointDir` (the
-    * [[pageRank]] contract, ADVICE r17): the in-memory path cuts every
-    * round (each cut is plan truncation, not an extra pass), while the
-    * parquet path pays an eager write job per cut and so keeps the
-    * caller's cadence. Pass `checkpointDir` on reliable storage when a
-    * cluster deployment needs the rounds REPLAYABLE after executor
-    * loss — localCheckpoint blocks die with their executor; the
-    * parquet round files outlive the call and the caller deletes the
-    * dir once the result is consumed.
+    * the edge relation's lineage is cut every round ([[Iterate]]).
+    * Pass `checkpointDir` on reliable storage when a cluster deployment
+    * needs the rounds REPLAYABLE after executor loss — localCheckpoint
+    * blocks die with their executor; the parquet round files
+    * (dir/kcore-<uuid>/round_N, one per round) outlive the call and the
+    * caller deletes the dir once the result is consumed.
     *
     * @return (node, deg) for surviving nodes — their degree within the
     *         surviving subgraph */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            rounds: Int, checkpointEvery: Int = 5,
-            checkpointDir: Option[String] = None): DataFrame = {
+            rounds: Int, checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
-    require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val ckptBase = checkpointDir.map(d =>
-      s"$d/kcore-${java.util.UUID.randomUUID()}")
-    var ckptN = 0
-    val s = col(srcCol).cast("string")
-    val d = col(dstCol).cast("string")
-    // both directions at rest: degree = out-degree of the doubled form
-    val undirected = edges
-      .select(least(s, d).as("a"), greatest(s, d).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    // partitioned by u at rest: each round's degree aggregate is then
+    val undirected = undirectedEdges(edges, srcCol, dstCol)
+    // both directions at rest: degree = out-degree of the doubled form,
+    // partitioned by u: each round's degree aggregate is then
     // exchange-free (the groupBy key matches the cached partitioning),
     // and the survivor semi-joins — node-sized build sides AQE
-    // broadcasts — preserve it for the next round's persist
-    var e = undirected.select(col("a").as("u"), col("b").as("v"))
+    // broadcasts — preserve it for the next round's cut
+    val doubled = kept(undirected.select(col("a").as("u"), col("b").as("v"))
       .union(undirected.select(col("b").as("u"), col("a").as("v")))
-      .repartition(col("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheScope.register(e)
-    for (i <- 1 to rounds) {
-      val keep = e.groupBy(col("u")).agg(count(lit(1)).as("__d"))
+      .repartition(col("u")))
+    Iterate("kcore", checkpointDir).rounds(doubled, rounds) { e =>
+      val alive = e.groupBy(col("u")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k).select(col("u"))
-      val next = e.join(keep, Seq("u"), "left_semi")
-        .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
+      e.join(alive, Seq("u"), "left_semi")
+        .join(alive.select(col("u").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-      // In-memory path: lineage cut EVERY round. A lazy localCheckpoint
-      // truncates the LOGICAL plan to a leaf immediately (no additional
-      // pass beyond the round's own work; under AQE the round's shuffle
-      // stages materialize at the cut rather than at the caller's
-      // action — ADVICE r17). Without the cut, rounds nest: every
-      // action-side CacheManager canonicalization, AQE re-optimization,
-      // and listener plan-string walks the whole tower — measured 6.6 s
-      // of driver time vs 2.8 s of jobs on q130 (5 rounds). The parquet
-      // path (checkpointDir) pays an eager write job per cut, so it
-      // keeps the caller's checkpointEvery cadence — the pageRank
-      // contract.
-      e = ckptBase match {
-        case Some(dir) if i % checkpointEvery == 0 && i < rounds =>
-          val p = s"$dir/round_$ckptN"; ckptN += 1
-          next.write.parquet(p)
-          next.sparkSession.read.parquet(p)
-        case Some(_) => next
-        case None => CacheScope.registerCheckpoint(
-          next.localCheckpoint(eager = false))
-      }
-    }
-    e.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
+    }.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
   }
 
   /** Multi-source BFS hop distance: shortest hop count from any seed,
@@ -245,24 +317,18 @@ object Graph {
     // co-partitioning, and a second full-edge shuffle on top of the
     // distinct()'s would be pure cost (measured +25% at sf1). At
     // 100 TB the edge table would be bucketed by src at rest instead.
-    val e = CacheScope.register(
-      edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val seed = CacheScope.register(
-      seeds.distinct.toDF("node").withColumn("dist", lit(0L)).persist())
+    val e = edgeRel(edges, srcCol, dstCol)
+    val seed = kept(seeds.distinct.toDF("node").withColumn("dist", lit(0L)))
     var dist = seed
     var frontier = seed
     var frontierN = seed.count()
     val sizes = scala.collection.mutable.ArrayBuffer(frontierN)
     var hop = 1
     while (hop <= maxHops && frontierN > 0) {
-      val fresh = CacheScope.register(
-        e.join(frontier, e("src") === frontier("node"))
-          .select(col("dst").as("node")).distinct()
-          .join(dist, Seq("node"), "left_anti")
-          .withColumn("dist", lit(hop.toLong))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val fresh = kept(e.join(frontier, e("src") === frontier("node"))
+        .select(col("dst").as("node")).distinct()
+        .join(dist, Seq("node"), "left_anti")
+        .withColumn("dist", lit(hop.toLong)))
       frontierN = fresh.count()
       sizes += frontierN
       // disjoint by the anti-join: plain union IS the min-dist merge
@@ -284,202 +350,29 @@ object Graph {
     *
     * Per round: one edges⋈labels equi-join, one (node, label) count
     * shuffle, and a min-struct argmax (never a per-node sort window);
-    * state is one label per node, lineage cut every round (the q47/q108
-    * iterative discipline). Initial label = the node's own id. */
+    * state is one label per node, lineage cut every round
+    * ([[Iterate]]). Initial label = the node's own id. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int): DataFrame = {
-    // repartition on src before the persist: each round's label join
-    // then reshuffles only the node-sized label state, never the edges
-    // (the pageRank ew trick)
-    val e = CacheScope.register(
-      edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst")).distinct()
-        .repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nodes = CacheScope.register(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().persist())
-    // A node with NO in-edges never receives a vote, so it keeps its
-    // INITIAL label (its own id) every round — computed once and
-    // UNIONed back (plan-free), replacing the per-round left join
-    // against the full node set: every in-degree>0 node gets a vote
-    // every round (all in-neighbors always carry a label), so the
-    // aggregate's output is exactly the complement. Same trick as
-    // pageRank's zeroIn; one join stage per round saved, results
-    // identical.
-    val noIn = CacheScope.register(
-      nodes.join(e.select(col("dst").as("node")).distinct(),
-          Seq("node"), "left_anti")
-        .withColumn("label", col("node"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    var labels = nodes.withColumn("label", col("node"))
-    for (_ <- 1 to rounds) {
-      val voted = e.join(labels, e("src") === labels("node"))
-        .groupBy(col("dst").as("node2"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-        // argmax by (count desc, label asc) as one min-struct aggregate
-        .groupBy(col("node2"))
-        .agg(min(struct((-col("__c")).as("nc"), col("label").as("l")))
-          .as("__m"))
-        .select(col("node2").as("node"), col("__m.l").as("label"))
-      labels = CacheScope.registerCheckpoint(
-        voted.union(noIn).localCheckpoint(eager = false))
-    }
-    labels
-  }
-
-  /** PERSONALIZED PageRank: teleport mass flows only to `seeds` instead
-    * of uniformly — rank becomes "importance relative to the seed set",
-    * the standard similar-items / recommendation primitive (random walk
-    * with restart). Same per-iteration shape and determinism contract
-    * as [[pageRank]] (one edges⋈ranks join + map-side-combined sum per
-    * round, per-iteration 9-dp rounding); differences: the teleport
-    * term is (1−d)/|S| on seeds and 0 elsewhere, and the initial state
-    * is the seed distribution. Non-seed nodes unreachable from the
-    * seeds correctly converge to rank 0. Seeds are a driver-side
-    * literal list (metadata-sized — anchor items, a user's history),
-    * compiled into an isin predicate, never a join. */
-  def personalizedPageRank(edges: DataFrame, srcCol: String,
-                           dstCol: String, seeds: Seq[String],
-                           iters: Int, damping: Double = 0.85,
-                           roundTo: Int = 9): DataFrame = {
-    require(iters >= 0, "iters must be non-negative")
-    require(seeds.nonEmpty, "personalization needs at least one seed")
-    val e = CacheScope.register(
-      edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    // repartition on src BEFORE the persist: the cached relation then
-    // REPORTS hashpartitioning(src), so every iteration's rank join
-    // reshuffles only the node-sized rank state — the edge side (the
-    // big one) never transits a shuffle again (see pageRank)
-    val ew = CacheScope.register(
-      e.repartition(dataWidth(e), col("src"))
-        .join(outdeg, "src").persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nodes = CacheScope.register(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // (1-d)/|S| as ONE driver-side double, matching the oracle's
-    // literal expression (1.0 - d) / |S| op-for-op
-    val tele = (1.0 - damping) / seeds.size
-    def p0tele = when(col("node").isin(seeds: _*), lit(tele))
-      .otherwise(lit(0.0))
-    val zeroIn = CacheScope.register(
-      nodes.join(e.select(col("dst").as("node")).distinct(),
-          Seq("node"), "left_anti")
-        .select(col("node"), round(p0tele, roundTo).as("rank"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    var ranks = nodes.withColumn("rank",
-      when(col("node").isin(seeds: _*), lit(1.0 / seeds.size))
-        .otherwise(lit(0.0)))
-    for (i <- 1 to iters) {
-      val in = ew.join(ranks, ew("src") === ranks("node"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") / col("__deg")).as("__in"))
-      ranks = in
-        .select(col("node"),
-          round(p0tele + lit(damping) * col("__in"), roundTo).as("rank"))
-        .union(zeroIn)
-      // every round, not every 5: lazy cut — no additional pass; under
-      // AQE the round's shuffle stages materialize at the cut (see
-      // pageRank)
-      if (i < iters)
-        ranks = CacheScope.registerCheckpoint(ranks.localCheckpoint(false))
-    }
-    ranks
-  }
-
-  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85,
-               roundTo: Int = 9, checkpointEvery: Int = 5,
-               checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 0, "iters must be non-negative")
-    require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val ckptBase = checkpointDir.map(d =>
-      s"$d/pr-${java.util.UUID.randomUUID()}")
-    var ckptN = 0
-    def ckpt(df: DataFrame): DataFrame = ckptBase match {
-      case Some(dir) =>
-        val p = s"$dir/round_$ckptN"; ckptN += 1
-        df.write.parquet(p)
-        df.sparkSession.read.parquet(p)
-      case None =>
-        CacheScope.registerCheckpoint(df.localCheckpoint(eager = false))
-    }
-    // e is consumed by BOTH derived relations below (degree-annotated
-    // edges, node set): persist it so the caller's edge-construction
-    // lineage — typically a full fact-table scan — runs once
-    val e = CacheScope.register(
-      edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // out-degree rides ON the persisted edge relation, attached once:
-    // each iteration then pays ONE join (the rank state) instead of two
-    // and never re-aggregates the edges. The repartition on src sits
-    // BEFORE the persist so the cached relation reports
-    // hashpartitioning(src): every iteration's rank join then
-    // reshuffles only the node-sized rank state — the edge side (the
-    // m-sized one, the whole per-round cost at 100 TB) never transits
-    // a shuffle again. outdeg is derived from the same partitioning,
-    // so the degree join itself is exchange-free too.
-    val ew = CacheScope.register(
-      // explicit data-sized width: AQE coalesces a keyed
-      // repartition(col) by its compressed bytes, so the cached relation
-      // came back hashpartitioning(src, 1-3) at ×10 scale and every
-      // per-round join/partial-agg stage — which scans this cache and
-      // cannot be re-split by AQE — ran its CPU on 1-3 cores (measured:
-      // 35.4 → 28.9 s at sf1b from sizing the width; see dataWidth for
-      // the fixture-scale side of the trade)
-      e.repartition(dataWidth(e), col("src"))
-        .join(e.groupBy(col("src")).agg(count(lit(1)).as("__deg")), "src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nodes = CacheScope.register(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val n = nodes.count()
-    // A node with NO in-edges holds the constant teleport rank
-    // (1-d)/N from iteration 1 onward — computed ONCE and UNIONed back
-    // each round (a union is plan-free), instead of a per-iteration
-    // left join against the node set. The aggregate's output already
-    // covers every in-degree>0 node, so the union is exactly the
-    // missing rows. Cuts one join stage per iteration.
-    val zeroIn = CacheScope.register(
-      nodes.join(e.select(col("dst").as("node")).distinct(),
-          Seq("node"), "left_anti")
-        .select(col("node"),
-          round(lit((1.0 - damping) / n), roundTo).as("rank"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // 1/N is a single IEEE division — identical in any engine, no
-    // rounding needed on the initial state
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    for (i <- 1 to iters) {
-      val in = ew.join(ranks, ew("src") === ranks("node"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") / col("__deg")).as("__in"))
-      ranks = in
-        .select(col("node"),
-          round(lit((1.0 - damping) / n) +
-            lit(damping) * col("__in"), roundTo).as("rank"))
-        .union(zeroIn)
-      // Lineage cut every round when no checkpointDir is given: a LAZY
-      // localCheckpoint truncates the logical plan to a leaf with no
-      // additional pass (under AQE the round's shuffle stages
-      // materialize at the cut — ADVICE r17), so the per-round
-      // CacheManager canonicalization, AQE
-      // re-optimization, and listener plan-string costs stay constant
-      // instead of growing with the round tower (the q130 kCore
-      // lesson — driver tree work dominated jobs ~2:1 at bench scale).
-      // The parquet checkpointDir path keeps its caller-set cadence:
-      // each cut there is an eager write job, not free.
-      if (ckptBase.isEmpty && i < iters)
-        ranks = CacheScope.registerCheckpoint(
-          ranks.localCheckpoint(eager = false))
-      else if (i % checkpointEvery == 0 && i < iters) ranks = ckpt(ranks)
-    }
-    ranks
+    // repartitioned on src: each round's label join then reshuffles
+    // only the node-sized label state, never the edges (the pageRank ew
+    // trick)
+    val e = edgeRel(edges, srcCol, dstCol, bySrc = true)
+    val nodes = nodesOf(e)
+    // a node with NO in-edges never receives a vote, so it keeps its
+    // INITIAL label (its own id) every round
+    val noIn = kept(noInEdges(e, nodes).withColumn("label", col("node")))
+    Iterate("lp", None)
+      .rounds(nodes.withColumn("label", col("node")), rounds) { labels =>
+        e.join(labels, e("src") === labels("node"))
+          .groupBy(col("dst").as("node2"), col("label"))
+          .agg(count(lit(1)).as("__c"))
+          // argmax by (count desc, label asc) as one min-struct aggregate
+          .groupBy(col("node2"))
+          .agg(min(struct((-col("__c")).as("nc"), col("label").as("l")))
+            .as("__m"))
+          .select(col("node2").as("node"), col("__m.l").as("label"))
+          .union(noIn)
+      }
   }
 }

@@ -7,11 +7,10 @@ package graft.operators
   * directories, different relations): the later job's tasks back-fill
   * executors freed by the earlier job's tail.
   *
-  * CacheScope is thread-local, so callers must register any persisted
-  * intermediate on the CALLING thread before handing work to `all`;
-  * the spawned bodies must only run actions (writes, counts) over
-  * already-constructed frames or construct frames that register
-  * nothing. */
+  * Each body runs inside the CALLING thread's CacheScope: whatever a
+  * body registers (persisted intermediates, an iterative loop's
+  * checkpoint blocks) lands in the caller's scope and is released at its
+  * boundary, exactly as if the body had run on the calling thread. */
 private[graft] object Par {
 
   /** Run the given thunks concurrently and wait for ALL to settle
@@ -21,7 +20,8 @@ private[graft] object Par {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val futs = fs.map(f => Future(f()))
+    val scope = CacheScope.current
+    val futs = fs.map(f => Future(CacheScope.within(scope)(f())))
     val settled = futs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
     settled.map(_.get)
   }

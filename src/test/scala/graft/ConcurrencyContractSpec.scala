@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{CompactSwap, Dedup, TextSearch}
+import graft.operators.{CacheScope, CompactSwap, Dedup, Par, TextSearch}
 
 /** The single-writer contract (r15 verdict missing #4): an append or
   * delete racing a compact's stage→swap window is silently LOST — the
@@ -206,6 +206,26 @@ class ConcurrencyContractSpec extends AnyFunSuite {
           new java.io.File(dir).getParentFile)
       }
     }
+  }
+
+  test("Par.all bodies register into the caller's CacheScope: a " +
+       "component loop run on a Par thread leaves no checkpoint blocks " +
+       "after release") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (7L, 5L))
+      .toDF("a", "b")
+    val before = sc.getPersistentRDDs.keySet
+    val (counts, captured) = CacheScope.collect {
+      Par.all(() => Dedup.connectedComponents(pairs).count(),
+        () => Dedup.connectedComponents(pairs.filter($"a" > 3)).count())
+    }
+    assert(counts == Seq(7L, 3L))
+    captured.release()
+    // the loop unpersists its own caches; what it leaves behind is its
+    // label checkpoints, which only the scope can release
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs outlived the scope: $left")
   }
 
   test("LSH ref index: append/takedown refused while either relation " +

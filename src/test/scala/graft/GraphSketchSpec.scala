@@ -214,6 +214,19 @@ class GraphSketchSpec extends AnyFunSuite {
     assert(math.abs(r("b") - 0.06375) < 1e-9)
   }
 
+  test("personalizedPageRank with every node a seed IS pageRank, " +
+    "bit for bit (one rank loop)") {
+    import spark.implicits._
+    val edges = Seq((1, 2), (2, 3), (3, 1), (3, 4), (4, 2), (5, 3), (2, 5),
+      (6, 1)).toDF("src", "dst")
+    def ranksOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val pr = ranksOf(Graph.pageRank(edges, "src", "dst", iters = 7))
+    val ppr = ranksOf(Graph.personalizedPageRank(edges, "src", "dst",
+      seeds = (1 to 6).map(_.toString), iters = 7))
+    assert(pr.size == 6 && ppr == pr)
+  }
+
   test("sequencePairs: hand-traced sessions — first-occurrence order, " +
       "gap boundary breaks, repetition counted once") {
     import spark.implicits._
@@ -278,7 +291,7 @@ class GraphSketchSpec extends AnyFunSuite {
     // r17 verdict #7): identical fixed point, rounds hit disk
     val tmpK = java.nio.file.Files.createTempDirectory("graft_kc").toString
     val corePq = Graph.kCore(k4pend, "s", "d", k = 3, rounds = 5,
-      checkpointEvery = 2, checkpointDir = Some(tmpK))
+      checkpointDir = Some(tmpK))
     val core3 = Graph.kCore(k4pend, "s", "d", k = 3, rounds = 5)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(corePq.collect().map(r => r.getString(0) -> r.getLong(1))
@@ -292,6 +305,33 @@ class GraphSketchSpec extends AnyFunSuite {
     // and a triangle IS its own 2-core
     val tri = Seq((1, 2), (2, 3), (1, 3)).toDF("s", "d")
     assert(Graph.kCore(tri, "s", "d", k = 2, rounds = 5).count() == 3)
+  }
+
+  test("kCore: parquet checkpointDir path cuts EVERY round — plan " +
+    "constant in round count, one round dir per round") {
+    import spark.implicits._
+    val edges = ((for { a <- 1 to 6; b <- 1 to 6 if a < b } yield (a, b)) ++
+      (7 to 12).map(i => (i - 1, i))).toDF("s", "d")
+    def planNodes(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case p => p }.size
+    def roundDirs(dir: String): Seq[String] =
+      new java.io.File(dir).listFiles().toSeq.flatMap(_.listFiles().toSeq)
+        .map(_.getName).filter(_.startsWith("round_"))
+    val tmp2 = java.nio.file.Files.createTempDirectory("graft_kc2").toString
+    val tmp10 = java.nio.file.Files.createTempDirectory("graft_kc10").toString
+    try {
+      val two = Graph.kCore(edges, "s", "d", k = 3, rounds = 2,
+        checkpointDir = Some(tmp2))
+      val ten = Graph.kCore(edges, "s", "d", k = 3, rounds = 10,
+        checkpointDir = Some(tmp10))
+      assert(planNodes(ten) == planNodes(two),
+        s"10-round plan ${planNodes(ten)} vs 2-round ${planNodes(two)}")
+      assert(roundDirs(tmp2).size == 2 && roundDirs(tmp10).size == 10)
+      // the K6 is the 3-core; the pendant chain peels away
+      assert(ten.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+        (1 to 6).map(_.toString -> 5L).toMap)
+    } finally Seq(tmp2, tmp10).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
   // ----------------------------------------------------------- bfsDistance
