@@ -1,121 +1,63 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Run
 
-/** Benchmark main: one JSON line with per-query steady-state wall times.
-  *
-  * A warmup pass at sf0.001 runs every query once first: a cold JVM spends
-  * ~7s on JIT + whole-stage-codegen compilation + classloading that would
-  * otherwise be billed to whichever query happens to run first (measured:
-  * q19 8.4s cold vs 1.5s warm). The timed pass then measures the engine,
-  * not the JVM. */
+/** Benchmark main: every query through the bench protocol
+  * (`Run.bench`: sf0.001 warm-up, min of 2 timed passes), then ONE JSON
+  * line on stdout with per-query steady-state wall times. */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.withGraftConf(Tables.withBenchShuffle(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"), cpus.toInt, sfDir))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // scaling-probe observability (r17 verdict #2): prove the session
-    // actually saw $SPARK_GRAFT_CPUS — defaultParallelism is derived
-    // from the master string, so a probe comparing core counts can
-    // verify the knob was live from this line alone
-    System.err.println(s"[bench] cpus=$cpus " +
+    val sfDir = Run.sfDir
+    val spark = Tables.session(Run.cpus, sfDir)
+    // scaling-probe observability: defaultParallelism is derived from
+    // the master string, so this line alone proves the session actually
+    // saw $SPARK_GRAFT_CPUS
+    System.err.println(s"[bench] cpus=${Run.cpus} " +
       s"defaultParallelism=${spark.sparkContext.defaultParallelism} " +
       s"master=${spark.sparkContext.master}")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val warmDir = "/root/testdata/sf0.001"
-    // Queries that persist intermediates (the dedup family) never unpersist
-    // them — the returned DataFrame still references the cached relation.
-    // Across 88 executions (warmup + timed) that accumulates; clearing after
-    // each query keeps every measurement self-contained and memory flat.
-    // cacheManager.clearCache() only sees SQL-level caches: the iterative
-    // family (PageRank/CC/label-prop/refined-pairs) cuts lineage with
-    // RDD-level localCheckpoint blocks that live until the ContextCleaner
-    // happens to GC them — across 3×159 executions in one 8 GB JVM that
-    // accumulation is what SIGKILLed the round-10 official bench (exit 137
-    // mid-pass-2). Unpersist them explicitly after every query.
-    // SPARK_GRAFT_BENCH_RDD_SWEEP=false reverts to the r10 behavior —
-    // the A/B knob that confirmed the crash mechanism (r11)
-    val rddSweep = sys.env
-      .getOrElse("SPARK_GRAFT_BENCH_RDD_SWEEP", "true").toBoolean
-    def clearCache(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      if (rddSweep) spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    if (new java.io.File(warmDir).isDirectory) {
-      names.foreach { n =>
-        try SparkEntry.queries(n)(spark, warmDir).count()
-        catch { case _: Throwable => () }
-        clearCache()
-      }
-    }
-    // Two timed passes, per-query MIN: the host this runs on shows
-    // load spikes from outside the container that inflate individual
-    // queries 3-5x (see BASELINE.md "host noise"); the min of two
-    // steady-state passes measures the engine, not the neighbor.
-    def timedPass(): Map[String, Double] = names.map { name =>
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      clearCache()
-      // progress to stderr (stdout stays the one JSON line): long runs
-      // at sf1 are otherwise a black box, and a pathological query
-      // (the q52-incident class) can only be identified mid-flight.
-      // rdds/heap (sampled AFTER the clear): the accumulation signature
-      // that SIGKILLed the r10 run is visible here long before the OOM
-      val rt = Runtime.getRuntime
-      System.err.println(f"[bench] $name%-32s $dt%8.2f s " +
-        f"rdds=${spark.sparkContext.getPersistentRDDs.size}%3d " +
-        f"heap=${(rt.totalMemory - rt.freeMemory) / (1 << 20)}%5dM")
-      name -> dt
-    }.toMap
-    val p1 = timedPass()
-    val p2 = timedPass()
-    val results = names.map(n => n -> math.min(p1(n), p2(n)))
-    // Ascending-cost key order: the driver's bench artifact keeps only
-    // the TAIL of an over-long JSON line (r12/r13 both archived with a
-    // head-truncated map), so cheapest-first ordering makes the
-    // surviving tail carry the expensive half of the suite — the half
-    // every cross-round comparison actually reads (r13 VERDICT). JSON
-    // objects are order-insensitive, so any complete parse is
-    // unaffected.
-    val qs = results.sortBy(_._2).map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // Family subtotals, emitted BEFORE the per-query map: the driver's
-    // archived artifact truncates over-long lines (r12/r13 head-cut,
-    // r14 tail-cut — both directions observed), so a handful of
-    // aggregate numbers near the line head plus the ascending-cost tail
-    // make ANY surviving fragment cross-round comparable. Keyword rules
-    // below are ordered by precedence and must stay stable across
-    // rounds — they are the comparison keys.
-    def family(n: String): String =
-      if (n.contains("pipeline") || n.contains("corpus")) "pipelines"
-      else if (Seq("pagerank", "ppr", "triangles", "kcore", "bfs",
-        "label_prop", "components", "cc_").exists(n.contains)) "graph"
-      else if (Seq("fsck", "compact", "append", "index_delete",
-        "lifecycle", "at_rest", "saved", "shard").exists(n.contains))
-        "lifecycle"
-      else if (Seq("knn", "ann_", "bm25", "range", "recall", "rrf",
-        "_search").exists(n.contains)) "serving"
-      else if (Seq("dedup", "minhash", "simhash", "jaccard", "decontam",
-        "neardup", "fingerprint", "containment").exists(n.contains))
-        "dedup"
-      else "rest"
-    val subs = results.groupBy(r => family(r._1)).toSeq.sortBy(_._1)
+    val results = Run.bench(spark, sfDir,
+        SparkEntry.queries.keys.toSeq.sorted, passes = 2)
+      .map(r => r.name -> r.secs)
+    System.err.println(s"[bench] subtotals ${subtotals(results)}")
+    println(line(results, sfDir))
+    spark.stop()
+  }
+
+  /** Family of a query name. Keyword rules are ordered by precedence and
+    * must stay stable across rounds — they are the comparison keys of
+    * the subtotals. */
+  def family(n: String): String =
+    if (n.contains("pipeline") || n.contains("corpus")) "pipelines"
+    else if (Seq("pagerank", "ppr", "triangles", "kcore", "bfs",
+      "label_prop", "components", "cc_").exists(n.contains)) "graph"
+    else if (Seq("fsck", "compact", "append", "index_delete",
+      "lifecycle", "at_rest", "saved", "shard").exists(n.contains))
+      "lifecycle"
+    else if (Seq("knn", "ann_", "bm25", "range", "recall", "rrf",
+      "_search").exists(n.contains)) "serving"
+    else if (Seq("dedup", "minhash", "simhash", "jaccard", "decontam",
+      "neardup", "fingerprint", "containment").exists(n.contains))
+      "dedup"
+    else "rest"
+
+  def subtotals(results: Seq[(String, Double)]): String =
+    results.groupBy(r => family(r._1)).toSeq.sortBy(_._1)
       .map { case (f, rs) =>
         "\"" + f + "\":{\"sec\":" + rs.map(_._2).sum +
           ",\"n\":" + rs.size + "}"
       }.mkString("{", ",", "}")
-    System.err.println(s"[bench] subtotals $subs")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"subtotals":$subs,"queries":$qs,"sf":"$sfDir"}""")
-    spark.stop()
+
+  /** The stdout contract. Family subtotals come BEFORE the per-query map
+    * and the map is in ascending-cost order: the archived artifact
+    * truncates over-long lines (head-cut and tail-cut both observed), so
+    * a few aggregates near the head plus the expensive half of the suite
+    * in the tail keep ANY surviving fragment cross-round comparable.
+    * JSON objects are order-insensitive, so a complete parse is
+    * unaffected. */
+  def line(results: Seq[(String, Double)], sfDir: String): String = {
+    val qs = results.sortBy(_._2).map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val total = results.map(_._2).sum
+    s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"subtotals":${subtotals(results)},"queries":$qs,"sf":"$sfDir"}"""
   }
 }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.SparkSession
   * true when a capture hook is installed on this thread or when the
   * session sets `spark.graft.obs=true`; false by default, so the
   * serving path pays zero stat-only actions (ADVICE r12: two
-  * unconditional counts + a println per probe on the path BenchServe
+  * unconditional counts + a println per probe on the path Run serve
   * times).
   *
   * The capture hook is a ThreadLocal: operator plans are built on the

@@ -1080,8 +1080,7 @@ object SparkEntry {
     * ranking the scan path answers (the q60/q69 shared-oracle pattern,
     * for lexical search). */
   private def q75(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_text_idx_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("text_idx", dir)
     operators.TextSearch.buildIndex(t(s, dir, "documents"), "doc_id", "text",
       path, nBuckets = 16)
     operators.TextSearch.bm25Indexed(s, path,
@@ -1099,8 +1098,7 @@ object SparkEntry {
     * text: the rolling-crawl ingest path and the full rebuild are
     * indistinguishable to a query, which is the whole claim. */
   private def q78(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_text_idxa_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("text_idxa", dir)
     val docs = t(s, dir, "documents")
     operators.TextSearch.buildIndex(docs.filter(col("doc_id") % 2 === 0),
       "doc_id", "text", path, nBuckets = 16)
@@ -1123,8 +1121,7 @@ object SparkEntry {
     * serving must be indistinguishable from a full build, radii-merge
     * soundness included. */
   private def q79(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_vec_idxa_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("vec_idxa", dir)
     val e = t(s, dir, "embeddings")
     val dim = e.select(size(col("embedding"))).head().getInt(0)
     VectorIndex.create(e.filter(col("vec_id") % 2 === 0),
@@ -1145,8 +1142,7 @@ object SparkEntry {
     * q68's oracle text: the rolling-crawl serving path must answer the
     * recompute path's exact result. */
   private def q80(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_lsh_idx_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("lsh_idx", dir)
     val docs = t(s, dir, "documents")
     val ref = docs.filter(col("doc_id") % 5 === 0)
     operators.Dedup.buildRefIndex(ref.filter(col("doc_id") % 10 === 0),
@@ -1167,8 +1163,7 @@ object SparkEntry {
     * under deletion for free (removing members can only shrink a
     * list's true max distance below the stored bound). */
   private def q81(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_vec_idxd_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("vec_idxd", dir)
     val e = t(s, dir, "embeddings")
     val dim = e.select(size(col("embedding"))).head().getInt(0)
     VectorIndex.create(e, "embedding", "vec_id", dim, nlist = 16).save(path)
@@ -1188,8 +1183,7 @@ object SparkEntry {
     * shrink through exact integer token sums recovered from the
     * victims' stored doc lengths. */
   private def q82(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_text_idxd_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("text_idxd", dir)
     val docs = t(s, dir, "documents")
     operators.TextSearch.buildIndex(docs, "doc_id", "text", path,
       nBuckets = 16)
@@ -1298,8 +1292,7 @@ object SparkEntry {
     * recompute path's exact rows — shares q88's oracle, the same
     * build-then-probe contract every saved index query makes. */
   private def q91(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_shards_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("shards", dir)
     operators.Sampling.writeShards(
       operators.Sampling.packSequences(t(s, dir, "documents"), "doc_id",
         size(split(col("text"), " ")), budget = 2048, nShards = 4),
@@ -1343,8 +1336,7 @@ object SparkEntry {
     * exactly (shares q82's oracle). Compaction changes cost, never
     * results. */
   private def q94(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_text_idxc_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("text_idxc", dir)
     val docs = t(s, dir, "documents")
     operators.TextSearch.buildIndex(docs.filter(col("doc_id") % 2 === 0),
       "doc_id", "text", path, nBuckets = 16)
@@ -1368,8 +1360,7 @@ object SparkEntry {
     * survivors (shares q81's oracle; the query vector vec_id 11 is
     * itself compacted away, so its distance-0 hit must not appear). */
   private def q95(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_vec_idxc_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("vec_idxc", dir)
     val e = t(s, dir, "embeddings")
     val dim = e.select(size(col("embedding"))).head().getInt(0)
     VectorIndex.create(e.filter(col("vec_id") % 2 === 0),
@@ -1677,8 +1668,7 @@ object SparkEntry {
     * incremental sketch must equal the one-shot sketch bit-for-bit —
     * the same build-then-probe contract as every saved index. */
   private def q113(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_cms_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("cms", dir)
     val toks = operators.CacheScope.register(
       t(s, dir, "documents")
         .select(col("doc_id"), explode(split(lower(col("text")), " "))
@@ -1708,8 +1698,7 @@ object SparkEntry {
     * q97's oracle text: the incremental model must score identically
     * to the one-shot fit. */
   private def q129(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_lm_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("lm", dir)
     val docs = t(s, dir, "documents")
     operators.TextAnalysis.saveLm(operators.TextAnalysis.lmCounts(
       docs.filter(col("doc_id") % 2 === 0), "text"), path)
@@ -2187,8 +2176,7 @@ object SparkEntry {
     * and interpolation expression over the whole table — mergeability
     * makes split-build ≡ one-shot build. */
   private def q137(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_hist_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("hist", dir)
     val li = t(s, dir, "lineitem")
     val (lo, hi, bins) = (0.0, 120000.0, 256)
     operators.Sketches.saveHistogram(operators.Sketches.histogramCounts(
@@ -2210,8 +2198,7 @@ object SparkEntry {
     * SHARES q62's oracle — the at-rest path must match the live
     * decontaminate over the union of both suites. */
   private def q138(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_evalidx_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("evalidx", dir)
     val docs = t(s, dir, "documents")
     operators.TextAnalysis.buildEvalIndex(
       docs.filter(col("doc_id") % 14 === 0), "doc_id", "text", 8, path)
@@ -2231,8 +2218,7 @@ object SparkEntry {
     * oracle rebuilds the identical md5/bin register file and the
     * identical fixed-order estimator in SQL — hash-matching a SKETCH. */
   private def q139(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_hll_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("hll", dir)
     val ev = Tables.events(s, dir)
     operators.Sketches.saveHll(operators.Sketches.hllRegisters(
       ev.filter(col("event_id") % 2 === 0), col("user_id"), 256,
@@ -2462,8 +2448,7 @@ object SparkEntry {
     * contract as every saved index). The daily-crawl absorption path:
     * only the new batch's pairs are ever verified. */
   private def q155(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_cc_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("cc", dir)
     val pairs = operators.CacheScope.register(
       operators.Dedup.ngramJaccardPairs(
         t(s, dir, "documents"), "doc_id", "text", n = 3, minJaccard = 0.5)
@@ -2495,8 +2480,7 @@ object SparkEntry {
     * this is the at-rest analog the r9 verdict required. */
   private def savedAdaptiveIndex(s: SparkSession, dir: String,
                                  tag: String): VectorIndex = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_adpt_${tag}_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch(s"adpt_$tag", dir)
     VectorIndex.create(partVec(s, dir), "vec", "p_partkey", dim = 2,
       cellsPerDim = 8, rowCap = 20, refine = 4).save(path)
     VectorIndex.load(s, path)
@@ -2568,8 +2552,7 @@ object SparkEntry {
     * oracle (= q68's recompute oracle), so build / append / compact /
     * probe and the one-shot recompute all hash-match the same answer. */
   private def q162(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_lsh_idxc_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("lsh_idxc", dir)
     val docs = t(s, dir, "documents")
     val ref = docs.filter(col("doc_id") % 5 === 0)
     operators.Dedup.buildRefIndex(ref.filter(col("doc_id") % 10 === 0),
@@ -2591,8 +2574,7 @@ object SparkEntry {
     * the survivors-only recompute (ref predicate doc_id % 10 = 5). The
     * crawl takedown path: q81/q82's contract for the LSH layout. */
   private def q163(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_lsh_idxt_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("lsh_idxt", dir)
     val docs = t(s, dir, "documents")
     val ref = docs.filter(col("doc_id") % 5 === 0)
     operators.Dedup.buildRefIndex(ref, "doc_id", "text", path,
@@ -2612,8 +2594,7 @@ object SparkEntry {
     * exactly what a fresh build on the survivors would (the q94/q95
     * contract for the LSH layout). */
   private def q164(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_lsh_idxlc_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("lsh_idxlc", dir)
     val docs = t(s, dir, "documents")
     val ref = docs.filter(col("doc_id") % 5 === 0)
     operators.Dedup.buildRefIndex(ref.filter(col("doc_id") % 10 === 0),
@@ -2639,8 +2620,7 @@ object SparkEntry {
     * enumeration sides (GridIndex.ballCoordRanges), so they stay
     * findable — the r3-at-rest analog the IVF layout got in r7. */
   private def q165(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_grid_app_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("grid_app", dir)
     val p = partVec(s, dir).select("p_partkey", "p_retailprice",
       "p_size", "vec")
     val even = p.filter(col("p_partkey") % 2 === 0)
@@ -2660,8 +2640,7 @@ object SparkEntry {
     * for rebuild, the documented drift contract), probed with q158's
     * exact-kNN query and oracle. */
   private def q166(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_adpt_app_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("adpt_app", dir)
     val p = partVec(s, dir).select("p_partkey", "p_retailprice",
       "p_size", "vec")
     val even = p.filter(col("p_partkey") % 2 === 0)
@@ -2730,8 +2709,7 @@ object SparkEntry {
     * the semi-join lands on the bucket-pruned postings, below the
     * ranking. */
   private def q169(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_text_idxf_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("text_idxf", dir)
     val docs = t(s, dir, "documents")
     operators.TextSearch.buildIndex(docs, "doc_id", "text", path,
       nBuckets = 16)
@@ -2754,8 +2732,7 @@ object SparkEntry {
     * fixture-independent. Corruption cases (duplicate-id appends,
     * orphan tombstones, missing sidecar) are spec-pinned. */
   private def q170(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_fsck_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("fsck", dir)
     val e = t(s, dir, "embeddings")
     VectorIndex.create(e, "embedding", "vec_id",
         dim = e.select(size(col("embedding"))).head().getInt(0),
@@ -2773,8 +2750,7 @@ object SparkEntry {
     * distinct (doc, term) pairs, doc count, token sum from the base
     * table; constants for geometry. */
   private def q171(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_fsck_txt_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("fsck_txt", dir)
     operators.TextSearch.buildIndex(t(s, dir, "documents"), "doc_id",
       "text", path, nBuckets = 16)
     operators.TextSearch.fsckIndex(s, path)
@@ -2789,8 +2765,7 @@ object SparkEntry {
     * residue, write-geometry ledger. Fresh build: band rows = nBands ×
     * docs exactly. */
   private def q172(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_fsck_lsh_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("fsck_lsh", dir)
     operators.Dedup.buildRefIndex(t(s, dir, "documents"), "doc_id",
       "text", path, k = 8, rowsPerBand = 2, shingleN = 3, nBuckets = 16)
     operators.Dedup.fsckRefIndex(s, path)
@@ -2838,8 +2813,7 @@ object SparkEntry {
     * save/append-merged cellCounts seeding histogram equals the raw
     * data's per-cell counts (auditing exactly the r14 append-merge). */
   private def q178(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_fsck_grid_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("fsck_grid", dir)
     val p = partVec(s, dir).select("p_partkey", "p_retailprice",
       "p_size", "vec")
     val even = p.filter(col("p_partkey") % 2 === 0)
@@ -2859,8 +2833,7 @@ object SparkEntry {
     * probe: the oracle is q3's ball filtered to the survivors — the
     * compacted layout must answer exactly like a rebuild on them. */
   private def q179(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_grid_cpt_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("grid_cpt", dir)
     val p = partVec(s, dir).select("p_partkey", "p_retailprice",
       "p_size", "vec")
     VectorIndex.create(p.filter(col("p_partkey") % 2 === 0), "vec",
@@ -2926,8 +2899,7 @@ object SparkEntry {
     * the re-ship never happened (shares the q60/q69/q76/q79 oracle):
     * the repair is provably a restore, not a mutation. */
   private def q182(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_vec_idxr_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("vec_idxr", dir)
     val e = t(s, dir, "embeddings")
     val dim = e.select(size(col("embedding"))).head().getInt(0)
     val odd = e.filter(col("vec_id") % 2 =!= 0)
@@ -2949,8 +2921,7 @@ object SparkEntry {
     * answer the scan path's exact full-corpus ranking (shares the
     * q65/q75/q78 oracle). */
   private def q183(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_text_idxr_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("text_idxr", dir)
     val docs = t(s, dir, "documents")
     val odd = docs.filter(col("doc_id") % 2 =!= 0)
     operators.TextSearch.buildIndex(docs.filter(col("doc_id") % 2 === 0),
@@ -2995,8 +2966,7 @@ object SparkEntry {
         pred = col("lang") === "en", nProbe0 = 2)
       .select(col("vec_id").as("doc_id"), (-col("dist")).as("ndist"))
     // sparse: saved postings index probed under the allowed set
-    val path = s"${sys.props("java.io.tmpdir")}/graft_text_idxh_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = Tables.scratch("text_idxh", dir)
     operators.TextSearch.buildIndex(docs, "doc_id", "text", path,
       nBuckets = 16)
     val textList = operators.TextSearch.bm25Indexed(s, path,
@@ -3101,8 +3071,7 @@ object SparkEntry {
     * recompute-predicted where a recompute can state them and contract
     * constants elsewhere — the q170 oracle discipline. */
   private def q173(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_fsck_sk_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val base = Tables.scratch("fsck_sk", dir)
     val toks = operators.CacheScope.register(
       t(s, dir, "documents")
         .select(col("doc_id"), explode(split(lower(col("text")), " "))
@@ -3161,8 +3130,7 @@ object SparkEntry {
     * `duplicate_rows` = cross-append duplicates (0 here: disjoint
     * suites, distinct within each). */
   private def q174(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_fsck_mdl_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val base = Tables.scratch("fsck_mdl", dir)
     val docs = t(s, dir, "documents")
     // the two model-artifact families (lm / evalidx) write different
     // directories — build and audit each on its own driver thread
@@ -3201,8 +3169,7 @@ object SparkEntry {
     * shard checks cross-audit data against the manifest a loader rank
     * trusts (shard domains match, row counts match, one write era). */
   private def q175(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_fsck_as_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val base = Tables.scratch("fsck_as", dir)
     val pairs = operators.CacheScope.register(
       operators.Dedup.ngramJaccardPairs(
         t(s, dir, "documents"), "doc_id", "text", n = 3, minJaccard = 0.5)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming throughput bench — the perf face of the streaming family
@@ -25,18 +24,10 @@ import org.apache.spark.sql.functions._
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = tools.Run.sfDir
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "8").toInt
-    val spark = Tables.withGraftConf(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_streambench").toString
+    val spark = Tables.session(tools.Run.cpus, sfDir)
+    val work = Tables.scratch("streambench", sfDir)
 
     // ---------- face 1: streamingFunnel over time-ordered micro-batches
     val ev = Tables.events(spark, sfDir)

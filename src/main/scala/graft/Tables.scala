@@ -31,6 +31,54 @@ object Tables {
     }
   }
 
+  /** This JVM's private scratch root: a fresh directory under
+    * java.io.tmpdir, created on first use and deleted when the JVM exits.
+    * Every path a query, bench or tool writes for itself lives below it,
+    * so two JVMs on one host can never share (and clobber) a scratch
+    * path. */
+  lazy val scratch: String = {
+    val root = java.nio.file.Files.createTempDirectory("graft_")
+    sys.addShutdownHook(
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root.toString
+  }
+
+  /** The scratch path for `tag` over data dir `dir`: stable within one
+    * JVM (a query's build and probe agree on it), distinct per data dir
+    * (the sf0.001 warm-up and the timed sf pass do not overwrite each
+    * other), private to this JVM. */
+  def scratch(tag: String, dir: String): String =
+    s"$scratch/${tag}_${Integer.toHexString(dir.hashCode)}"
+
+  /** The one session builder: `local[cpus]`, `cpus` final shuffle
+    * partitions, UI off, the graft conf and the data-sized initial
+    * shuffle width for `sfDir`, log level WARN. Bench, Verify, the tools
+    * and the test session all come from here, so an A/B measured on one
+    * of them holds for the others. */
+  def session(cpus: Int, sfDir: String): SparkSession = {
+    val spark = withGraftConf(withBenchShuffle(SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus.toString)
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", s"$scratch/warehouse"),
+      cpus, sfDir)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Release everything a query left cached: SQL-level caches AND
+    * persistent RDDs. The iterative family (PageRank/CC/label-prop/
+    * refined-pairs) cuts lineage with RDD-level localCheckpoint blocks
+    * that clearCache() never sees; they live until the ContextCleaner
+    * happens to GC them, and across hundreds of query executions in one
+    * JVM that accumulation is an out-of-memory kill. Call between
+    * queries. */
+  def sweep(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
   /** Session configs every graft session needs (Verify, Bench, tests).
     * The engine's extensions ride in via spark.sql.extensions: graft_*
     * SQL functions plus the optimizer rules (index-aware pruning over
@@ -40,11 +88,9 @@ object Tables {
   def withGraftConf(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.session.timeZone", "UTC")
-    // SPARK_GRAFT_AQE=false: measurement knob for the per-round AQE
-    // re-planning cost inside fixed-shape iterative loops (graph
-    // family) — production default stays on
-    .config("spark.sql.adaptive.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+    // AQE coalesces the data-sized initial width (withBenchShuffle)
+    // back down to what each exchange actually carries
+    .config("spark.sql.adaptive.enabled", "true")
     // The engine's intentional single-partition windows (metadata-sized
     // relations: histograms, shortlists, sketch bins) declare a CONSTANT
     // partition key so WindowExec's "No Partition Defined" warning only
@@ -56,46 +102,33 @@ object Tables {
       "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
     .config("spark.sql.extensions", "graft.GraftExtensions")
 
-  /** DATA-SIZED initial shuffle width for the BENCH entrypoints —
-    * partitions track the dataset, exactly how a real cluster is sized.
-    * spark.sql.shuffle.partitions (= cores locally) is the right FINAL
-    * width for fixture-scale work, but it also bounds per-task shuffle
-    * block size: the sf10 run showed linear-work queries going 12× per
-    * 10× data purely from 32-way shuffles spilling (~10M rows/task).
-    * r10 answered with a flat 8×cores initial width and AQE coalescing
-    * down — but MEASURED at sf0.1 that costs 25-40% on multi-stage
-    * pipeline queries (a few hundred near-empty reduce tasks per stage
-    * × many stages; q59 6.1→8.9 s, q73 9.9→13.7 s), so the flat knob
-    * was trading the small end for the big one. Instead: initial
-    * partitions = input bytes / 4 MB of parquet (≈100 MB of in-flight
-    * shuffle per task at the observed ~25× parquet-to-shuffle
-    * amplification), clamped to [cores, 2×cores]. sf0.1/sf1 land on
-    * `cores` (the measured-best width there), sf10 on 2×cores, and the
-    * clamp keeps the knob harmless on empty or enormous dirs. The
-    * upper clamp was 8×cores in r11's first cut; the post-fix ×100 A/B
-    * measured it against 2×cores and 2× won across the board — the
-    * iterative family pays the initial width on EVERY round's
-    * node-state exchange (PPR 315→124 s, PageRank 189→105, triangles
-    * 193→125 at sf10) and even the spill-prone shingle joins prefer it
-    * (exact prefix-Jaccard 366→225; 32-wide still spills: 516). On a
-    * real cluster `cores` is the executor total, so the absolute width
-    * still scales out; what this clamp encodes is per-CORE width, and
-    * 2 strikes the measured balance between per-task spill and
-    * per-round scheduler floor. SPARK_GRAFT_INITIAL_PARTITIONS
-    * overrides for measurement. NOT in withGraftConf: the test session and Verify
-    * run dozens of metadata-sized jobs per query, where extra task
-    * count is pure scheduler overhead. */
-  def withBenchShuffle(b: SparkSession.Builder, cpus: Int,
-                       sfDir: String): SparkSession.Builder = {
+  /** DATA-SIZED initial shuffle width — partitions track the dataset,
+    * exactly how a real cluster is sized. spark.sql.shuffle.partitions
+    * (= cores locally) is the right FINAL width for fixture-scale work,
+    * but it also bounds per-task shuffle block size: at sf10 a flat
+    * 32-way shuffle spilled (~10M rows/task) and linear-work queries
+    * went 12× per 10× data, while a flat 8×cores width cost 25-40% on
+    * multi-stage pipelines at sf0.1 (hundreds of near-empty reduce
+    * tasks per stage). So: input bytes / 4 MB of parquet (≈100 MB of
+    * in-flight shuffle per task at the observed ~25× parquet-to-shuffle
+    * amplification), clamped to [cores, 2×cores]. The sf0.001/sf0.01
+    * fixtures land on `cores` — Spark's own default, so Verify and the
+    * test session plan exactly as without this — sf0.1 on `cores` from
+    * 4 cores up, and sf10 on 2×cores, which beat 8×cores at ×100 across
+    * the board (the iterative family pays the initial width on every
+    * round's node-state exchange). */
+  def initialPartitions(cpus: Int, sfDir: String): Int = {
     def dirBytes(f: java.io.File): Long =
       if (f.isFile) f.length()
       else Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
     val sized = dirBytes(new java.io.File(sfDir)) / (4L << 20)
-    val initial = math.min(math.max(sized, cpus.toLong), 2L * cpus)
-    b.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-        initial.toString))
+    math.min(math.max(sized, cpus.toLong), 2L * cpus).toInt
   }
+
+  def withBenchShuffle(b: SparkSession.Builder, cpus: Int,
+                       sfDir: String): SparkSession.Builder =
+    b.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      initialPartitions(cpus, sfDir).toString)
 
   /** Register every table as a temp view so spark.sql(...) mirrors the
     * DuckDB oracle exactly. */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,13 +8,7 @@ object Verify {
     // optional extra args: restrict the dump to these query names (dev
     // loop with tools/check_oracle.py; the driver always passes two)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tables.withGraftConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(tools.Run.cpus, sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -26,9 +19,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // operators persist intermediates (CacheScope is a no-op outside a
-      // collect scope); without this the ~80-query dump accumulates every
-      // cached relation — MEMORY_AND_DISK pressure, not correctness
-      spark.sharedState.cacheManager.clearCache()
+      // collect scope) and the iterative family leaves localCheckpoint
+      // RDDs; without this the dump accumulates all of them
+      Tables.sweep(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -312,7 +312,7 @@ object CorpusPipeline {
     //    of which would otherwise inline — and re-analyze on every
     //    Dataset call while the chain is being BUILT — the full
     //    quality+window plan, and re-execute it at runtime. Measured on
-    //    q73 (ProfileQuery): 4.3 s of driver dead-time before the first
+    //    q73 (Run profile): 4.3 s of driver dead-time before the first
     //    pipeline job, main thread in resolveOperatorsDownWithPruning —
     //    construction-time analysis over the inlined tower. Same
     //    executor-loss trade-off as the chunk/span cuts below.

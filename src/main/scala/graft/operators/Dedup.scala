@@ -329,24 +329,14 @@ object Dedup {
     // a real executor's share at fixed per-node data stays in the
     // measured linear regime — the ×100 single-box overshoot is spill
     // past one box's memory, not a scaling defect of the plan.
-    // GRAFT_PREFIX_WIDTH: measurement override for the candidate-join
-    // width — forces the exchange to N partitions with ZERO stats jobs
-    // (the A/B the r12 verdict asked for: is the rejected estimate's
-    // loss the stats pre-scan, or is a wider join-only exchange itself
-    // a loss here?). Consulted BEFORE the estimate so the override
-    // really does skip the pre-scan even when candRowsPerPartition is
-    // also set. Dev knob, same contract as
-    // SPARK_GRAFT_INITIAL_PARTITIONS; not a production path.
-    val forced = sys.env.get("GRAFT_PREFIX_WIDTH")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
     val candEst =
-      if (forced.nonEmpty || candRowsPerPartition <= 0L) 0L
+      if (candRowsPerPartition <= 0L) 0L
       else prefix.groupBy(col("shingle"))
         .agg(count(lit(1)).as("__c"))
         .agg(coalesce(sum(col("__c") * (col("__c") - 1L)), lit(0L)))
         .head().getLong(0) / 2L
-    val w = forced.orElse(candidateWidth(docs.sparkSession, candEst,
-      candRowsPerPartition, tag = "prefix-jaccard"))
+    val w = candidateWidth(docs.sparkSession, candEst,
+      candRowsPerPartition, tag = "prefix-jaccard")
     def sized(df: DataFrame): DataFrame =
       w.map(df.repartition(_, col("shingle"))).getOrElse(df)
     val cands = sized(prefix.select(col(idCol).as("a"),
@@ -972,7 +962,7 @@ object Dedup {
     //
     // Write-parallelism coupling: one-task-per-bucket makes nBuckets
     // the BULK-BUILD parallelism knob as well as the probe-pruning
-    // knob — size it to the corpus (the BenchServe discipline:
+    // knob — size it to the corpus (the Run serve discipline:
     // nBuckets ≈ nDocs/3125, so per-bucket volume is constant and
     // build parallelism grows with data). maxRecordsPerFile is the
     // safety net for a mis-sized knob: a hot bucket degrades to a few

@@ -244,7 +244,7 @@ object TextSearch {
       // agg's task layout sprays tasks x buckets tiny files and every
       // probe pays the listing — the r13 crawl-loop lesson). This also
       // makes nBuckets the BUILD parallelism knob: size it to the
-      // corpus (nDocs/3125 in BenchServe) so per-bucket volume stays
+      // corpus (nDocs/3125 in Run serve) so per-bucket volume stays
       // constant; maxRecordsPerFile bounds a mis-sized hot bucket.
       .repartition(col(BucketCol))
       .write.mode("overwrite")

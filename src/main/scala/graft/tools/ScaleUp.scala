@@ -61,13 +61,7 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else ".benchdata/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = Tables.withGraftConf(
-      SparkSession.builder()
-        .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(Runtime.getRuntime.availableProcessors(), src)
     try write(spark, src, dst, copies)
     finally spark.stop()
   }

@@ -100,7 +100,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("searchFilteredExact: permissive predicate on the clustered regime " +
        "certifies WITHOUT probing every list") {
     // clustered data is where the ring certificate has teeth: pull every
-    // vector 4:1 toward its nearest of 8 anchors (the BenchServe
+    // vector 4:1 toward its nearest of 8 anchors (the Run serve
     // clustered-corpus construction) so list radii shrink well below
     // inter-centroid distances
     val anchors = IvfIndex.fitCentroids(e, "embedding", "vec_id", nlist = 8)

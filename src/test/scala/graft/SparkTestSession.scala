@@ -4,17 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (parallelExecution=false). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = Tables.withGraftConf(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
   val sf0001 = "/root/testdata/sf0.001"
+  lazy val spark: SparkSession = Tables.session(4, sf0001)
 }
