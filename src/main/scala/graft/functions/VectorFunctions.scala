@@ -81,10 +81,6 @@ object VectorFunctions {
       .otherwise(transform(toDouble(a), x => x / n))
   }
 
-  /** Inclusive ball predicate: dist²(a,b) <= r² (reference semantics). */
-  def inRange(a: Column, b: Column, r: Column): Column =
-    sqDist(a, b) <= r * r
-
   /** Dimension check used at ingest (SURVEY §1.1: dim is a schema-level
     * invariant). */
   def dimCheck(a: Column, dim: Int): Column = size(a) === dim

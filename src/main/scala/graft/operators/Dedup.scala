@@ -743,10 +743,10 @@ object Dedup {
     * Scale design: signatures are per-document (each side computed
     * independently, one groupBy each); the band equi-join is the only
     * cross-corpus contact; verification shingles are semi-joined down to
-    * candidate documents before the intersection join (64-bit hashed on
-    * the wire, same negligible-collision argument as decontaminate);
-    * intersection pairs are inner-joined back to the candidate set so
-    * non-candidate shingle collisions cost nothing downstream. For a
+    * candidate documents and folded into one hash set per document
+    * (64-bit hashed on the wire, same negligible-collision argument as
+    * decontaminate), and each candidate pair intersects its two sets,
+    * so non-candidate shingle collisions cost nothing. For a
     * rolling pipeline the ref-side banded relation is a natural
     * artifact to persist between batches (write it once, join every new
     * batch against it) — it is nBands rows per document, not per
@@ -775,7 +775,6 @@ object Dedup {
     def candShingles(docs: DataFrame, out: String): DataFrame =
       shingles(docs, idCol, textCol, shingleN, repartitionById = false)
         .select(col(idCol).as(out), xxhash64(col("shingle")).as("__sh"))
-        .distinct()
         .join(cands.select(col(out)).distinct(), Seq(out), "left_semi")
     crossVerifyTail(cands, candShingles(fresh, "__fid"),
       candShingles(ref, "__rid"), idCol, minJaccard)
@@ -819,19 +818,31 @@ object Dedup {
   }
 
   /** The exact-Jaccard verification tail shared by minhashAgainst and
-    * minhashAgainstIndex: candidate-filtered hashed-shingle relations in,
-    * (idCol, n_ref_dups, max_jaccard) out. Expects shF as (__fid, __sh)
-    * and shR as (__rid, __sh), both DISTINCT and already semi-joined to
-    * the candidate documents. */
+    * minhashAgainstIndex: candidate pairs and hashed-shingle relations
+    * in, (idCol, n_ref_dups, max_jaccard) out. Expects shF as (__fid,
+    * __sh) and shR as (__rid, __sh), already semi-joined to the
+    * candidate documents. Each doc's hashes fold into one set, so a
+    * repeated (id, hash) row counts once — the crawl's crash window can
+    * leave a doc's saved shingle rows doubled (see [[crawlStep]]).
+    *
+    * Per candidate pair: c = |F ∩ R|, jaccard = c / (|F| + |R| − c),
+    * pairs sharing no hash dropped. Scale trade: the work is candidate
+    * pairs × per-doc set sizes — every candidate pair intersects its two
+    * sets — where a shingle equi-join pays the collisions of EVERY doc
+    * pair that shares a shingle, candidate or not, and a hot
+    * boilerplate shingle fans out to all pairs of its docs. LSH bounds
+    * the candidate pairs; a set is one row per doc on the wire. */
   private def crossVerifyTail(cands: DataFrame, shF: DataFrame,
                               shR: DataFrame, idCol: String,
                               minJaccard: Double): DataFrame = {
-    val szF = shF.groupBy(col("__fid")).agg(count(lit(1)).as("__nf"))
-    val szR = shR.groupBy(col("__rid")).agg(count(lit(1)).as("__nr"))
-    shF.join(shR, "__sh")
-      .groupBy(col("__fid"), col("__rid")).agg(count(lit(1)).as("__c"))
-      .join(cands, Seq("__fid", "__rid"), "left_semi")
-      .join(szF, "__fid").join(szR, "__rid")
+    val setsF = shF.groupBy(col("__fid")).agg(collect_set(col("__sh")).as("__f"))
+    val setsR = shR.groupBy(col("__rid")).agg(collect_set(col("__sh")).as("__r"))
+    cands.join(setsF, "__fid").join(setsR, "__rid")
+      .select(col("__fid"), col("__rid"),
+        size(array_intersect(col("__f"), col("__r"))).cast("long").as("__c"),
+        size(col("__f")).cast("long").as("__nf"),
+        size(col("__r")).cast("long").as("__nr"))
+      .filter(col("__c") > 0)
       .withColumn("__j",
         round(col("__c") / (col("__nf") + col("__nr") - col("__c")), 6))
       .filter(col("__j") >= minJaccard)
@@ -1046,7 +1057,6 @@ object Dedup {
         .withColumnRenamed(idCol, "__fid").persist())
     val shB = sh
       .select(col(idCol).as("__fid"), xxhash64(col("shingle")).as("__sh"))
-      .distinct()
     probeIndexCore(spark, meta, indexPath, bf, shB, minJaccard,
       maxBucketSize)
   }
@@ -1054,7 +1064,7 @@ object Dedup {
   /** The probe core shared by [[minhashAgainstIndex]] and [[crawlStep]]:
     * given the batch's BANDED relation (persisted by the caller — it is
     * read by the bucket collect, the hot-cap union and the band join)
-    * and its distinct hashed-shingle relation, prune the saved index to
+    * and its hashed-shingle relation, prune the saved index to
     * the named buckets and run the band join + exact verification. */
   private def probeIndexCore(spark: SparkSession, meta: LshIndexMeta,
                              indexPath: String, bf: DataFrame,
@@ -1091,45 +1101,40 @@ object Dedup {
       brAll.join(broadcast(ex.select(col("__rid")).distinct()),
         Seq("__rid"), "left_anti"))
     val cands = crossBandCandidates(bf, br, maxBucketSize)
-    // candidate ref docs' shingle buckets — metadata-sized collect
-    // (<= nBuckets values), names the shingles/ partitions to verify in
-    val ridBuckets = cands
-      .select(pmod(xxhash64(col("__rid")), lit(meta.nBuckets))
-        .cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    // candidate ref docs' shingle buckets name the shingles/ partitions
+    // to verify in. No distinct here for the crash window's doubled
+    // shingle rows: crossVerifyTail folds each doc's hashes into a set.
     val shR = spark.read.parquet(s"$indexPath/$LshShinglesDir")
-      .filter(col(LshRidBucketCol).isin(ridBuckets: _*))
+      .filter(col(LshRidBucketCol).isin(
+        bucketsOf(cands, "__rid", meta.nBuckets): _*))
       .drop(LshRidBucketCol)
       .join(cands.select(col("__rid")).distinct(), Seq("__rid"), "left_semi")
-      // crossVerifyTail's contract requires shR DISTINCT per (id, hash):
-      // the crawl ingest keeps the index duplicate-free by construction
-      // (crawlStep skips re-appends on replay), but one crash window —
-      // shingles append committed, bands append not — can leave a doc's
-      // shingle rows doubled on the NEXT replay. This distinct (over the
-      // pruned, candidate-filtered relation — small) makes that window
-      // harmless instead of inflating later batches' Jaccard into false
-      // duplicate drops.
-      .distinct()
     val shF = shB
       .join(cands.select(col("__fid")).distinct(), Seq("__fid"), "left_semi")
     crossVerifyTail(cands, shF, shR, idCol, minJaccard)
   }
 
-  /** The saved bands relation pruned to the batch's band buckets — a
-    * distinct over the (tiny) banded batch relation names the ONLY
+  /** The saved bands relation pruned to the batch's band buckets — the
+    * bucket numbers of the (tiny) banded batch relation name the ONLY
     * partitions of bands/ a collision can live in. One bucket collect +
     * one directory listing; share the returned frame across consumers. */
   private def prunedBandsOf(spark: SparkSession, meta: LshIndexMeta,
-                            indexPath: String, bf: DataFrame): DataFrame = {
-    val bandBuckets = bf
-      .select(pmod(xxhash64(col("band_val")), lit(meta.nBuckets))
-        .cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+                            indexPath: String, bf: DataFrame): DataFrame =
     lshLiveOnly(spark, indexPath,
       spark.read.parquet(s"$indexPath/$LshBandsDir")
-        .filter(col(LshBandBucketCol).isin(bandBuckets: _*))
+        .filter(col(LshBandBucketCol).isin(
+          bucketsOf(bf, "band_val", meta.nBuckets): _*))
         .drop(LshBandBucketCol))
-  }
+
+  /** The distinct hash buckets of `key` over `df`, ascending, for a
+    * literal-IN partition filter: each partition folds its rows into a
+    * set and the driver unions them — one map-side job, no distinct
+    * shuffle. At most nBuckets values, so the collect is metadata-sized
+    * at any scale. */
+  private def bucketsOf(df: DataFrame, key: String, nBuckets: Int): Seq[Int] =
+    df.select(pmod(xxhash64(col(key)), lit(nBuckets)).cast("int"))
+      .rdd.aggregate(Set.empty[Int])((s, r) => s + r.getInt(0), _ ++ _)
+      .toSeq.sorted
 
   /** Tombstone anti-join for the saved LSH layout — a no-op when no
     * delete has ever run. Sits at the ONE chokepoint every consumer of
@@ -1249,8 +1254,8 @@ object Dedup {
     * second, presence detected from bands (written last), so a crash
     * between the two appends means the replay re-appends BOTH — the
     * bands land once (they never committed), the shingles land twice;
-    * that doubled-shingles state is made harmless by the probe-side
-    * distinct on the pruned shingle relation. Presence is a per-doc
+    * that doubled-shingles state is made harmless by the verification
+    * folding each doc's shingle hashes into a set. Presence is a per-doc
     * DISTINCT band_idx COUNT (>= nBands), not any-row existence or raw
     * rows, so even a partial bands job commit re-appends the doc whole
     * (duplicate band rows for the committed subset — harmless:
@@ -1349,8 +1354,8 @@ object Dedup {
     * oracle); rows DEDUPLICATED — the doubled shingle rows
     * of the shingles-committed/bands-not crash window and the
     * duplicate band rows of a partial bands job commit, tolerated at
-    * probe time by set-semantic candidates, the distinct'd
-    * verification scan and the set-semantic hot-bucket cap, are paid
+    * probe time by set-semantic candidates, the per-doc shingle sets
+    * of the verification and the set-semantic hot-bucket cap, are paid
     * off for good — and each bucket's files merged into one writer
     * task's output (`repartition` on the bucket column, the same
     * one-task-per-bucket geometry as the build). Probe answers are

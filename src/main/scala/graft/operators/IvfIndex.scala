@@ -49,7 +49,7 @@ object IvfIndex {
     * relation and the build should shard — a different regime than one
     * fit call. */
   def autoNlist(n: Long, targetListSize: Int = 32,
-                maxNlist: Int = 4096): Int = {
+                maxNlist: Int = WriteGeometry.MaxDirFanOut): Int = {
     require(targetListSize > 0 && maxNlist > 0)
     math.min(maxNlist.toLong,
       math.max(1L, (n + targetListSize - 1) / targetListSize)).toInt

@@ -15,6 +15,13 @@ private[graft] object WriteGeometry {
     * 100–200 MB parquet sweet spot. */
   val MaxFileRows: Int = 4000000
 
+  /** The widest directory fan-out the engine writes itself: IVF's
+    * `autoNlist` cap on list directories, above every bucket count the
+    * saved layouts are built with. The session lists a directory this
+    * wide on the driver (`Tables.withGraftConf`); a wider one keeps
+    * Spark's distributed listing job. */
+  val MaxDirFanOut: Int = 4096
+
   /** Rewrite fan-out for a flat (non-bucket-dir) layout compaction:
     * ceil(rows / MaxFileRows) range partitions, floored at the build
     * default so small layouts keep the build's file geometry. A fixed

@@ -11,6 +11,10 @@ class DedupSpec extends AnyFunSuite {
 
   private lazy val docs = Tables.load(spark, SparkTestSession.sf0001, "documents")
 
+  /** Spark jobs one saved-index probe may run (job budget test below):
+    * 24 measured, plus 2 for AQE's run-to-run variation. */
+  private val ProbeJobBudget = 26
+
   test("exactByKey keeps exactly one row per key group (smallest id)") {
     val out = Dedup.exactByKey(docs, Seq("lang", "source"), "doc_id")
     val keys = out.select("lang", "source").distinct().count()
@@ -644,6 +648,139 @@ class DedupSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(_._1).toList
       assert(got === want && want.nonEmpty)
+    } finally {
+      org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(dir).getParentFile)
+    }
+  }
+
+  /** Word-n-gram shingle set of `text`, split exactly as
+    * Dedup.shingles splits (single spaces, no normalization). */
+  private def shingleSet(text: String, n: Int = 3): Set[String] = {
+    val toks = text.split(" ", -1)
+    if (toks.length < n) Set.empty
+    else toks.sliding(n).map(_.mkString(" ")).toSet
+  }
+
+  /** Exact Jaccard rounded as the verification tail rounds it. */
+  private def exactJaccard(a: Set[String], b: Set[String]): Double = {
+    val c = (a intersect b).size
+    if (c == 0) 0.0
+    else BigDecimal(c.toDouble / (a.size + b.size - c))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
+
+  test("minhashAgainst / minhashAgainstIndex verification is exact: " +
+       "every returned max_jaccard equals the driver-side word-3-gram " +
+       "Jaccard of the doc's best reference match, and doubled saved " +
+       "shingle rows change nothing") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val vocab = (0 until 400).map(i => s"w$i")
+    def words(n: Int) = Vector.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    val bases = Vector.fill(12)(words(40))
+    // ref: the bases, a ref-internal variant of three of them, and
+    // unrelated docs; fresh: one- to three-word edits of each base and
+    // unrelated docs
+    def edit(ws: Vector[String], k: Int) =
+      (0 until k).foldLeft(ws)((acc, i) =>
+        acc.updated((i * 13 + 5) % acc.size, s"x${rnd.nextInt(1000)}"))
+    val refRows = bases.zipWithIndex.map { case (b, i) =>
+        (100L + i, b.mkString(" ")) } ++
+      (0 until 3).map(i => (200L + i, edit(bases(i), 2).mkString(" "))) ++
+      (0 until 10).map(i => (300L + i, words(40).mkString(" ")))
+    val freshRows = bases.zipWithIndex.map { case (b, i) =>
+        (1L + i, edit(b, 1 + i % 3).mkString(" ")) } ++
+      (0 until 8).map(i => (50L + i, words(30).mkString(" ")))
+    val ref = refRows.toDF("doc_id", "text")
+    val fresh = freshRows.toDF("doc_id", "text")
+    val refSets = refRows.map { case (id, t) => id -> shingleSet(t) }
+    val minJ = 0.5
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(_._1).toList
+    def checkExact(got: List[(Long, Long, Double)]): Unit = {
+      assert(got.nonEmpty)
+      got.foreach { case (id, nDups, maxJ) =>
+        val f = shingleSet(freshRows.find(_._1 == id).get._2)
+        val js = refSets.map { case (_, r) => exactJaccard(f, r) }
+        assert(maxJ === js.max, s"doc $id")
+        assert(maxJ >= minJ, s"doc $id")
+        assert(nDups >= 1 && nDups <= js.count(_ >= minJ), s"doc $id")
+      }
+    }
+    val recompute = rows(operators.Dedup.minhashAgainst(fresh, ref,
+      "doc_id", "text", minJaccard = minJ))
+    checkExact(recompute)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_lsh_exact").toString + "/idx"
+    try {
+      operators.Dedup.buildRefIndex(ref, "doc_id", "text", dir,
+        nBuckets = 4)
+      val viaIndex = rows(operators.Dedup.minhashAgainstIndex(fresh, dir,
+        "text", minJaccard = minJ))
+      checkExact(viaIndex)
+      assert(viaIndex === recompute)
+      // the crawl's crash window: one matched reference doc's shingle
+      // rows appended a second time
+      val twice = 100L
+      val shDir = s"$dir/${operators.Dedup.LshShinglesDir}"
+      val dup = spark.createDataFrame(
+        spark.read.parquet(shDir)
+          .filter(col("__rid") === twice).collectAsList(),
+        spark.read.parquet(shDir).schema)
+      val before = dup.count()
+      assert(before > 0)
+      dup.write.mode("append")
+        .partitionBy(operators.Dedup.LshRidBucketCol).parquet(shDir)
+      assert(spark.read.parquet(shDir).filter(col("__rid") === twice)
+        .count() === 2 * before)
+      assert(rows(operators.Dedup.minhashAgainstIndex(fresh, dir, "text",
+        minJaccard = minJ)) === viaIndex)
+    } finally {
+      org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(dir).getParentFile)
+    }
+  }
+
+  test("minhashAgainstIndex job budget: bucket dirs listed on the " +
+       "driver, no listing job, bounded job count per probe") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = Tables.load(spark, SparkTestSession.sf0001, "documents")
+    val nBuckets = 64
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_lsh_budget").toString + "/idx"
+    val jobs =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      // (tasks, call site): a job's result stage is named after the
+      // user-code frame that started it
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add((js.stageInfos.map(_.numTasks).sum,
+          js.stageInfos.maxBy(_.stageId).name))
+    }
+    try {
+      operators.Dedup.buildRefIndex(docs.filter(col("doc_id") % 5 === 0),
+        "doc_id", "text", dir, nBuckets = nBuckets)
+      val fresh = docs.filter(col("doc_id") % 5 =!= 0)
+      org.apache.spark.graft.ObsBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val got = try {
+        val n = operators.Dedup.minhashAgainstIndex(fresh, dir, "text")
+          .collect().length
+        org.apache.spark.graft.ObsBus.drain(spark.sparkContext)
+        n
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(got > 0)
+      val seen = jobs.toArray(Array.empty[(Int, String)]).toSeq
+      // a distributed listing job runs one task per bucket directory
+      // under the reader's `parquet at` call site; the reader's schema
+      // inference is the only other job there, one task
+      val listings = seen.filter { case (tasks, site) =>
+        tasks > 1 && site.startsWith("parquet at") }
+      assert(listings.isEmpty, seen.mkString("\n"))
+      info(s"probe jobs: ${seen.size}")
+      assert(seen.size <= ProbeJobBudget, seen.mkString("\n"))
     } finally {
       org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(dir).getParentFile)
