@@ -12,9 +12,12 @@ copy, with its build, is removed on exit.
 
 For every end-to-end metric of BENCHMARK.json it prints each side's
 median and quartiles, how many pairs the change won, and whether the
-gain rule holds: the change better in at least 9 of 10 pairs, and the
-medians further apart than the base's interquartile range. `--log`
-keeps every run's result JSON, one line per run.
+gain rule holds: the change better in at least 9 of every 10 pairs run
+(a pair with a failed run counts as lost), its median better by more
+than the base's interquartile range, and every change run correct with
+no larger share of failed ops than the base. Each run's window is
+BENCHMARK.json's run_seconds. `--log` keeps every run's result JSON,
+one line per run.
 """
 import argparse
 import json
@@ -42,12 +45,11 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def run_once(checkout, workload, seed, seconds, trace):
+def run_once(checkout, workload, seed, seconds):
     """One perfbench run; returns its result JSON (None on failure)."""
     res = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds),
-         "--trace", str(trace)],
+         "--seed", str(seed), "--seconds", str(seconds)],
         cwd=checkout, stdin=subprocess.DEVNULL, capture_output=True,
         text=True)
     lines = res.stdout.strip().splitlines()
@@ -62,9 +64,6 @@ def main():
     ap.add_argument("--base", required=True, help="git revision to compare against")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="A-B (inclusive) or A")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="measured window (default: BENCHMARK.json run_seconds)")
-    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--tmpdir", default=None,
                     help="parent directory of the base copy (default: system temp)")
     ap.add_argument("--log", default=None, help="append each run's result JSON here")
@@ -72,7 +71,7 @@ def main():
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = args.seconds or bench["run_seconds"]
+    seconds = bench["run_seconds"]
     metrics = bench["end_to_end"]
     seeds = seeds_of(args.seeds)
 
@@ -91,8 +90,7 @@ def main():
         for i, seed in enumerate(seeds):
             order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
             for side in order:
-                r = run_once(sides[side], args.workload, seed, seconds,
-                             args.trace)
+                r = run_once(sides[side], args.workload, seed, seconds)
                 results[side].append(r)
                 if args.log:
                     with open(args.log, "a") as f:
@@ -108,11 +106,26 @@ def main():
 
     print(f"base={args.base} workload={args.workload} seeds={args.seeds} "
           f"seconds={seconds} pairs={len(seeds)}")
+    report(results, metrics)
+
+
+def report(results, metrics):
+    """Prints the per-side run tallies and one line per end-to-end metric."""
+    n_pairs = len(results["base"])
+    ops = {}
     for side in ("base", "change"):
         ok = [r for r in results[side] if r is not None]
+        failed = sum(r["failed"] for r in ok)
+        attempted = sum(r["attempted"] for r in ok)
+        ops[side] = failed / attempted if attempted else 1.0
         print(f"{side}: {len(results[side]) - len(ok)} runs failed; "
               f"incorrect {sum(not r['correct'] for r in ok)}; failed ops "
-              f"{sum(r['failed'] for r in ok)}/{sum(r['attempted'] for r in ok)}")
+              f"{failed}/{attempted}")
+    # A gain counts only when every change run finished with correct
+    # answers and no larger share of its ops failed than at the base.
+    change_sound = (all(r is not None and r["correct"]
+                        for r in results["change"]) and
+                    ops["change"] <= ops["base"])
     print(f"{'metric':<20} {'base median [q1, q3]':>30} "
           f"{'change median [q1, q3]':>30} {'delta':>8} {'wins':>6}  gain rule")
     for m in metrics:
@@ -124,15 +137,18 @@ def main():
             continue
         bq = quartiles([b for b, _ in pairs])
         cq = quartiles([c for _, c in pairs])
-        wins = sum((c < b) if lower else (c > b) for b, c in pairs)
+        better = (lambda b, c: c < b) if lower else (lambda b, c: c > b)
+        # Wins are counted over every pair run: a pair with a failed run
+        # is a pair the change did not win.
+        wins = sum(better(b, c) for b, c in pairs)
         delta = (cq[1] - bq[1]) / bq[1] if bq[1] else float("nan")
-        holds = (wins >= 0.9 * len(pairs) and len(pairs) >= 10 and
+        holds = (change_sound and n_pairs >= 10 and
+                 wins >= 0.9 * n_pairs and better(bq[1], cq[1]) and
                  abs(cq[1] - bq[1]) > bq[2] - bq[0])
         print(f"{name:<20} {bq[1]:>12.4g} [{bq[0]:.4g}, {bq[2]:.4g}]".ljust(51) +
               f" {cq[1]:>12.4g} [{cq[0]:.4g}, {cq[2]:.4g}]".ljust(31) +
-              f" {delta:>+7.1%} {wins:>3}/{len(pairs):<2}  "
+              f" {delta:>+7.1%} {wins:>3}/{n_pairs:<2}  "
               f"{'holds' if holds else '-'}")
-
 
 if __name__ == "__main__":
     main()
