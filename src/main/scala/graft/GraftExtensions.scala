@@ -1,17 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{CosineSim, DotProduct, SqDistL2}
 
 /** Registers the engine's custom Catalyst expressions as SQL functions, so
-  * `spark.sql("... graft_sqdist(a, b) ...")` works next to the Column API.
+  * `spark.sql("... graft_sqdist(a, b) ...")` works next to the Column API,
+  * and injects the index-aware optimizer rules.
   *
-  * Two entry points:
-  *   - config-driven: `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  *   - imperative: `GraftExtensions.register(spark)` on a live session.
+  * One entry point: `.config("spark.sql.extensions", "graft.GraftExtensions")`,
+  * which every `Tables.session` / `Tables.withGraftConf` session sets.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -45,11 +45,4 @@ object GraftExtensions {
       info("graft_cosine",
         "graft_cosine(a, b) - cosine similarity of two double arrays"),
       (es: Seq[Expression]) => CosineSim(es(0), es(1))))
-
-  /** Imperative registration on an existing session (temp functions). */
-  def register(spark: SparkSession): Unit =
-    registrations.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
 }

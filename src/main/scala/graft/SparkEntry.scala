@@ -164,15 +164,12 @@ object SparkEntry {
         col("l_linenumber"))
       .limit(100)
 
-  /** Q14 — event-time tumbling window (1h) counts, batch-checkable form of
-    * the streaming aggregation (2B streaming; streaming path in
-    * graft.streaming.EventWindows shares this exact groupBy). Window start
-    * exposed as epoch seconds so both engines compare integer values. */
+  /** Q14 — event-time tumbling window (1h) counts (2B streaming):
+    * EventWindows.tumblingCounts, the aggregation that runs on a batch or
+    * a streaming DataFrame alike. Window start exposed as epoch seconds
+    * so both engines compare integer values. */
   private def q14(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(window(col("ts"), "1 hour").getField("start").as("wstart"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
+    streaming.EventWindows.tumblingCounts(Tables.events(s, dir), "1 hour")
       .select(unix_timestamp(col("wstart")).as("wstart"), col("event_type"),
         col("n"), col("sum_value"))
       .orderBy(col("wstart"), col("event_type"))

@@ -101,25 +101,15 @@ class VectorIndex private (
   }
 
   /** Approximate kNN via IVF (high-dim scale path); exact when
-    * nProbe >= nlist. */
+    * nProbe >= nlist. Cosine top-k: create() over
+    * `VectorFunctions.normalize(vec)` and probe with the unit-normalised
+    * query — on unit vectors L2 order == cosine order. */
   def annSearch(q: Seq[Double], k: Int, nProbe: Int = 4): DataFrame = {
     require(centroids.isDefined, "create(..., nlist > 0) to enable ANN")
     val assigned =
       if (data.columns.contains("list_id")) data
       else IvfIndex.assign(data, vecCol, idCol, centroids.get)
     IvfIndex.search(assigned, vecCol, idCol, centroids.get, q, k, nProbe)
-  }
-
-  /** Approximate top-k by COSINE similarity via the same IVF lists.
-    * (For a cosine-first corpus, normalize vectors at create() time and
-    * use annSearch — on unit vectors L2 order == cosine order, see
-    * VectorFunctions.normalize.) */
-  def annSearchCosine(q: Seq[Double], k: Int, nProbe: Int = 4): DataFrame = {
-    require(centroids.isDefined, "create(..., nlist > 0) to enable ANN")
-    val assigned =
-      if (data.columns.contains("list_id")) data
-      else IvfIndex.assign(data, vecCol, idCol, centroids.get)
-    IvfIndex.searchCosine(assigned, vecCol, idCol, centroids.get, q, k, nProbe)
   }
 
   /** Approximate kNN over the int8 scalar-quantized codes with exact

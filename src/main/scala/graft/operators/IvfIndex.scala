@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{sqDist, cosine}
+import graft.functions.VectorFunctions.sqDist
 
 /** IVF (inverted-file) approximate nearest-neighbor index — the high-dim
   * scale path (dim ≥ ~8, where GridIndex's cell enumeration explodes).
@@ -376,19 +376,6 @@ object IvfIndex {
       .select(col("qid"), col("col.id").as(idCol),
         col("col.score").as("dist"),
         (col("pos") + 1).cast("long").as("rn"))
-  }
-
-  /** ANN top-k by cosine similarity (descending), same pruning. */
-  def searchCosine(index: DataFrame, vecCol: String, idCol: String,
-                   centroids: Centroids, q: Seq[Double], k: Int,
-                   nProbe: Int, roundTo: Int = 6): DataFrame = {
-    val lists = probeLists(centroids, q, nProbe)
-    val qVec = array(q.map(lit): _*)
-    index
-      .filter(col("list_id").isin(lists: _*))
-      .withColumn("sim", round(cosine(col(vecCol), qVec), roundTo))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
   }
 
   // ===========================================================================

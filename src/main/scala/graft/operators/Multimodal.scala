@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: image/audio/video as opaque binary columns
@@ -468,44 +468,5 @@ object Multimodal {
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     Dedup.hammingPairs(sig, "id", sigCol,
       nBits = 64, maxHamming = maxHamming, maxBandBucket = maxBandBucket)
-  }
-
-  /** A sampled frame/chunk: fixed-size slice of the blob at a stride —
-    * the video-frame-sampling shape (a real decoder would seek keyframes;
-    * the slicing, fan-out and output schema are identical). */
-  case class MediaFrame(id: Long, frameIdx: Int, offset: Long,
-                        nBytes: Int, checksum: Long)
-
-  /** Frame/chunk sampling: every `stride` bytes take a `frameSize` slice,
-    * emit (id, frame_idx, offset, bytes, checksum) — one row per frame,
-    * blob dropped immediately. Partition-parallel fan-out with NO shuffle;
-    * at 100 TB the frame rows are the only thing downstream ever sees. */
-  def sampleFrames(media: Dataset[MediaRow], frameSize: Int,
-                   stride: Int): Dataset[MediaFrame] = {
-    require(frameSize > 0 && stride > 0)
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val n = r.blob.length
-        Iterator.range(0, math.max(n, 1), stride).zipWithIndex
-          .takeWhile { case (off, _) => off < n }
-          .map { case (off, idx) =>
-            val end = math.min(off + frameSize, n)
-            val slice = java.util.Arrays.copyOfRange(r.blob, off, end)
-            val (checksum, _) = byteStats(slice)
-            MediaFrame(r.id, idx, off.toLong, end - off, checksum)
-          }
-      }
-    }
-  }
-
-  /** End-to-end demo pipeline used by tests: text bytes stand in for
-    * media blobs (same plumbing, deterministic content). */
-  def featuresFromText(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val media = asMedia(
-      docs.withColumn("blob", encode(col("text"), "UTF-8")),
-      "doc_id", "blob", format = "text/utf-8")
-    extractFeatures(media).toDF()
   }
 }

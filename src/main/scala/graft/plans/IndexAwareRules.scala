@@ -202,18 +202,6 @@ object IndexAwareRules {
 
   def clear(): Unit = registry.clear()
 
-  /** Install on a live session (spark.experimental) — the config-free
-    * path used by tests and interactive sessions. GraftExtensions wires
-    * the same rules through SparkSessionExtensions for config-driven
-    * deployments. */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    val want = Seq(PruneBallSearch, PruneKnnSort, FuseBallPredicate)
-    val missing = want.filterNot(r => existing.exists(_ eq r))
-    if (missing.nonEmpty)
-      spark.experimental.extraOptimizations = existing ++ missing
-  }
-
   /** Every registered index relation in `plan`: (path, info, relation).
     * A relation qualifies only when it reads EXACTLY ONE root path and
     * that path is registered — a multi-dir scan (spark.read.parquet(a, b))

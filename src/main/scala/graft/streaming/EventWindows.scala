@@ -6,15 +6,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming surface over the events table (SURVEY.md §2B
-  * streaming): event-time tumbling/sliding window aggregation with
-  * watermarked late-data handling, and a foreachBatch incremental index
-  * append (the distributed analog of the reference's online `insert`,
-  * include/pktree.hpp:1262-1355 — mutation becomes micro-batch append).
+  * streaming): event-time tumbling/sliding window aggregation (batch or
+  * streaming), the file-stream source, the streaming funnel and the
+  * rolling-crawl dedup sink. The reference's online `insert`
+  * (include/pktree.hpp:1262-1355) is served in batch by
+  * `VectorIndex.appendSaved`, not by a stream.
   *
-  * The batch query q14_events_window and `tumblingCounts` share the same
-  * groupBy, so the streaming path is oracle-checked through its batch
-  * twin; the streaming-specific machinery (source, watermark, sink) is
-  * covered by ScalaTest with a file source driven to completion.
+  * q14_events_window calls `tumblingCounts`, so the shared aggregation is
+  * oracle-checked; the streaming-specific machinery (source, watermark,
+  * state, sink) is covered by ScalaTest with a file source driven to
+  * completion.
   */
 object EventWindows {
 
@@ -103,95 +104,6 @@ object EventWindows {
         reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
       else reader.parquet(path)
     if (tsIsLong) normalize(src) else src
-  }
-
-  /** Watermarked streaming tumbling counts → memory sink (for tests) or
-    * any sink the caller attaches. Late rows beyond the watermark are
-    * dropped — the documented late-data policy. */
-  def streamingTumblingCounts(events: DataFrame, windowLen: String,
-                              watermark: String): DataFrame =
-    tumblingCounts(events.withWatermark("ts", watermark), windowLen)
-
-  /** In-flight exact dedup: drop re-delivered rows by key while they are
-    * inside the watermark horizon. State is BOUNDED — a key's entry
-    * expires once the watermark passes it, so state size tracks the
-    * late-data window, not the stream length. The streaming twin of
-    * batch Dedup.exactByKey for at-least-once sources. */
-  def dedupWithinWatermark(events: DataFrame, watermark: String,
-                           keys: Seq[String] = Seq("event_id")): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Input row for the custom-state sessionizer. */
-  case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-
-  /** One open session in flight (timestamps in epoch micros). */
-  case class OpenSession(start: Long, last: Long, n: Long, sum: Double)
-
-  /** A finalized session. */
-  case class SessionRow(user_id: Long, session_start: Long, n: Long,
-                        sum_value: Double)
-
-  /** Streaming sessionization via flatMapGroupsWithState — the custom
-    * arbitrary-state path (SURVEY §2B streaming) for when the builtin
-    * `session_window` can't express the state logic. Semantics match the
-    * builtin/batch form: events strictly closer than `gapMinutes` chain
-    * into one session (boundary exactly at gap starts a new one).
-    *
-    * Exactness under out-of-order delivery: a session is emitted ONLY
-    * when the event-time watermark passes its end + gap (event-time
-    * timeout) — never because a later event "looks like" a new session,
-    * since a within-watermark straggler could still land between them.
-    * Until then a key can hold SEVERAL open sessions; an event bridging
-    * two of them merges them. State per key is bounded by the number of
-    * open sessions inside the watermark horizon, so state size tracks
-    * out-of-orderness, not stream length. Events older than the current
-    * watermark are dropped (the same late-data policy as the windowed
-    * aggregations). */
-  def streamingSessions(events: DataFrame, gapMinutes: Int = 30,
-                        watermark: String = "1 minute"): Dataset[SessionRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-
-    def tsUs(t: java.sql.Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos / 1000) % 1000
-
-    def coalesceSessions(ss: List[OpenSession]): List[OpenSession] =
-      ss.sortBy(_.start).foldLeft(List.empty[OpenSession]) {
-        case (prev :: rest, s) if s.start < prev.last + gapUs =>
-          OpenSession(prev.start, math.max(prev.last, s.last),
-            prev.n + s.n, prev.sum + s.sum) :: rest
-        case (acc, s) => s :: acc
-      }.reverse
-
-    def update(key: Long, it: Iterator[SessionEvent],
-               state: GroupState[List[OpenSession]]): Iterator[SessionRow] = {
-      val wmUs = state.getCurrentWatermarkMs() * 1000L
-      val fresh = it.map(e => (tsUs(e.ts), e.value))
-        .filter(_._1 >= wmUs) // documented late-data drop
-        .map { case (t, v) => OpenSession(t, t, 1, v) }
-        .toList
-      val merged = coalesceSessions(state.getOption.getOrElse(Nil) ::: fresh)
-      val (closed, open) = merged.partition(_.last + gapUs <= wmUs)
-      if (open.isEmpty) state.remove()
-      else {
-        state.update(open)
-        // earliest possible close; guaranteed > current watermark
-        state.setTimeoutTimestamp((open.map(_.last).min + gapUs) / 1000L)
-      }
-      closed.sortBy(_.start).iterator.map(s =>
-        SessionRow(key, s.start / 1000000L, s.n,
-          BigDecimal(s.sum).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble))
-    }
-
-    events.select(col("user_id"), col("ts"), col("value"))
-      .withWatermark("ts", watermark)
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
   }
 
   case class FunnelEvent(user_id: Long, ts: java.sql.Timestamp, step: Int)
@@ -303,63 +215,6 @@ object EventWindows {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(update)
   }
-
-  /** Stream-stream interval join: the streaming face of
-    * RangeJoin.intervalJoin — for every left event, all right events
-    * with the same key whose event time falls in [left.ts + lower,
-    * left.ts + upper). Expressed as Structured Streaming's native
-    * time-bound stream-stream join: both sides watermarked, the range
-    * condition part of the join predicate, so the engine derives the
-    * state-retention bound from the time constraint itself (a right row
-    * is dropped from state once the watermark passes its ts + upper —
-    * bounded state at any stream length, same policy Flink's interval
-    * join uses). Batch/stream parity is the contract: on the same
-    * finite input this must produce exactly RangeJoin.intervalJoin's
-    * rows (StreamingSpec drives both and compares).
-    *
-    * Output columns follow the batch operator: `l_*` / `r_*` prefixes.
-    */
-  def streamIntervalJoin(left: DataFrame, right: DataFrame, key: String,
-                         leftTs: String, rightTs: String,
-                         lowerSec: Long, upperSec: Long,
-                         watermark: String = "1 minute"): DataFrame = {
-    require(upperSec > lowerSec, "need upperSec > lowerSec")
-    val l = left.select(
-        col(key).as("__lk") +: col(leftTs).as("__lt") +:
-          left.columns.toSeq.map(c => col(c).as(s"l_$c")): _*)
-      .withWatermark("__lt", watermark)
-    val r = right.select(
-        col(key).as("__rk") +: col(rightTs).as("__rt") +:
-          right.columns.toSeq.map(c => col(c).as(s"r_$c")): _*)
-      .withWatermark("__rt", watermark)
-    l.join(r,
-        col("__lk") === col("__rk") &&
-          col("__rt") >= col("__lt") + expr(s"INTERVAL $lowerSec SECOND") &&
-          col("__rt") < col("__lt") + expr(s"INTERVAL $upperSec SECOND"))
-      .drop("__lk", "__rk", "__lt", "__rt")
-  }
-
-  /** foreachBatch incremental index append — the reference-insert analog:
-    * each micro-batch is cell-bucketed and appended to the index path.
-    * Periodic compaction (rebuild) keeps file counts bounded, exactly like
-    * the reference's periodic restructure.
-    *
-    * The spec is the caller's FIXED geometry: when appending to an index
-    * written by `VectorIndex.save`, read it from the `_graft_meta.json`
-    * sidecar (`IndexMeta.read(spark, indexPath).get.gridSpec.get`) — never
-    * re-fit from data, the stored cell ids live in the saved geometry
-    * (out-of-extent points clamp to border cells; pruning stays lossless
-    * because query-side enumeration clamps identically). */
-  def appendingIndexSink(events: DataFrame, spec: graft.operators.GridIndex.GridSpec,
-                         vecCol: String, indexPath: String,
-                         checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.GridIndex.withCellId(batch.toDF(), vecCol, spec)
-          .write.mode("append").parquet(indexPath)
-      }
-      .start()
 
   /** The STREAMING rolling crawl: each micro-batch of fresh documents is
     * (1) screened against the standing LSH reference index — matched

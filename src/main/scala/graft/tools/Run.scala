@@ -3,13 +3,15 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
 
 import graft.{Obs, SparkEntry, Tables, VectorIndex, operators}
+import graft.operators.Dedup
+import graft.streaming.EventWindows
 
 /** The dev harness: every measurement and inspection tool on the one
   * session Bench uses (`Tables.session`), so a number taken here
@@ -28,20 +30,33 @@ import graft.{Obs, SparkEntry, Tables, VectorIndex, operators}
   *   serve                        at-rest serving: build each saved layout
   *                                once, then time its probes and its fsck
   *                                audit alone (min of N), one JSON line
+  *   stream [--compact-every N] [--takedown-every N]
+  *                                micro-batch streaming: the streaming
+  *                                funnel, then the rolling crawl against a
+  *                                standing LSH index with interleaved
+  *                                compacts / takedowns, one JSON line
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4).
-  * --passes defaults to 2 (Bench's protocol). */
+  * --passes defaults to 2 (Bench's protocol); --compact-every and
+  * --takedown-every (stream only) default to 0 (never). */
 object Run {
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
   val WarmDir = "/root/testdata/sf0.001"
+  /** Micro-batch arrivals per `stream` run. */
+  val StreamBatches = 8
+  val Usage = "usage: Run <bench|profile|plans|serve|stream> [--passes N] " +
+    "[--compact-every N] [--takedown-every N] [args…]"
+  private val Modes = Set("bench", "profile", "plans", "serve", "stream")
 
   def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse(
-      sys.error("usage: Run <bench|profile|plans|serve> [--passes N] [args…]"))
-    val i = args.indexOf("--passes")
-    val passes = if (i < 0) 2 else args(i + 1).toInt
-    val rest = (if (i < 0) args else args.patch(i, Nil, 2)).toSeq.drop(1)
+    val mode = args.headOption.getOrElse(sys.error(Usage))
+    if (!Modes(mode)) sys.error(s"unknown mode $mode\n$Usage")
+    val (passes, r0) = intFlag(args.toSeq.drop(1), "--passes", 2, min = 1)
+    val (compactEvery, r1) = intFlag(r0, "--compact-every", 0, min = 0)
+    val (takedownEvery, rest) = intFlag(r1, "--takedown-every", 0, min = 0)
+    if (mode == "stream" && rest.nonEmpty)
+      sys.error(s"unexpected arguments: ${rest.mkString(" ")}\n$Usage")
     val spark = Tables.session(cpus, sfDir)
     try mode match {
       case "bench" =>
@@ -63,8 +78,22 @@ object Run {
           println(s"wrote $out")
         }
       case "serve" => println(serve(spark, sfDir, passes))
-      case m => sys.error(s"unknown mode $m")
+      case "stream" =>
+        println(stream(spark, sfDir, compactEvery, takedownEvery))
     } finally spark.stop()
+  }
+
+  /** `flag N` out of `args`: (N, or `default` when the flag is absent;
+    * the remaining args). A missing, non-integer or below-`min` value
+    * fails with the usage line. */
+  private def intFlag(args: Seq[String], flag: String, default: Int,
+                      min: Int): (Int, Seq[String]) = {
+    val i = args.indexOf(flag)
+    if (i < 0) (default, args)
+    else args.lift(i + 1).flatMap(_.toIntOption).filter(_ >= min) match {
+      case Some(n) => (n, args.patch(i, Nil, 2))
+      case None => sys.error(s"$flag needs an integer >= $min\n$Usage")
+    }
   }
 
   private def known(names: Seq[String]): Seq[String] = {
@@ -414,5 +443,158 @@ object Run {
     s""""text":{"n_buckets":$nBuckets,"build_secs":$buildText,""" +
     s""""probe_secs":$probeText,"rows":$textRows,"fsck_secs":$fsckText},""" +
     s""""lsh":{"build_secs":$buildLsh,"fsck_secs":$fsckLsh}}"""
+  }
+
+  /** Micro-batch streaming over the sf tables, `StreamBatches` arrivals
+    * per face; one JSON line (records go to BASELINE.md, not Bench).
+    *   - funnel: the events table cut into time-range micro-batches,
+    *     landed one at a time under `EventWindows.streamingFunnel`
+    *     (flatMapGroupsWithState); rows/s and the peak state-store rows.
+    *   - crawl: the documents table streamed through
+    *     `dedupAgainstIndexSink` against an LSH index seeded from a 10%
+    *     slice. `compactEvery` > 0 compacts the index every N batches;
+    *     `takedownEvery` > 0 tombstone-deletes ~1% of the kept docs every
+    *     N batches, and `probe_parity` then checks that the index answers
+    *     a probe exactly like one rebuilt over the survivors.
+    *   - epilogue: compactRefIndex on the crawled index, with file counts
+    *     and the same probe timed either side of it. */
+  def stream(spark: SparkSession, sfDir: String, compactEvery: Int,
+             takedownEvery: Int): String = {
+    val work = Tables.scratch("stream", sfDir)
+    // batch i of `df` (tagged "__b") lands as one file: a file-source arrival
+    def land(df: DataFrame, dir: String, i: Int): Unit =
+      df.filter(col("__b") === i).drop("__b")
+        .coalesce(1).write.mode("append").parquet(dir)
+
+    // ---------- face 1: streamingFunnel over time-ordered micro-batches
+    val ev = Tables.events(spark, sfDir)
+      .select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value"), col("props"))
+    val tsUs = unix_micros(col("ts").cast("timestamp"))
+    val (loUs, hiUs) = {
+      val r = ev.agg(min(tsUs), max(tsUs)).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val batched = ev.withColumn("__b",
+      ((tsUs - loUs) * StreamBatches / (hiUs - loUs + 1)).cast("int"))
+      .persist()
+    val nEvents = batched.count()
+    val evDir = s"$work/events"
+    land(batched, evDir, 0) // schema probe target for readStream
+    val t0 = System.nanoTime()
+    val q = EventWindows.streamingFunnel(
+        EventWindows.readStream(spark, evDir),
+        Seq("view", "click", "purchase"), maxGapSeconds = 86400L)
+      .toDF().writeStream.outputMode("append")
+      .option("checkpointLocation", s"$work/funnel_ckpt")
+      .format("memory").queryName("sb_funnel").start()
+    var stateMax = 0L
+    // sampled after EVERY drain, the first included, so a run where
+    // batch 0 dominates does not under-report state_rows_max
+    def drain(): Unit = {
+      q.processAllAvailable()
+      stateMax = math.max(stateMax, q.recentProgress
+        .flatMap(_.stateOperators.map(_.numRowsTotal)).foldLeft(0L)(math.max))
+    }
+    try {
+      drain()
+      for (i <- 1 until StreamBatches) { land(batched, evDir, i); drain() }
+    } finally q.stop()
+    val funnelSecs = (System.nanoTime() - t0) / 1e9
+    val funnelOut = spark.table("sb_funnel").count()
+    batched.unpersist()
+
+    // ---------- face 2: rolling-crawl dedup against a standing LSH index
+    val docs = Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    val refCut = docs.count() / 10
+    val idxPath = s"$work/lsh_idx"
+    Dedup.buildRefIndex(docs.filter(col("doc_id") < refCut), "doc_id", "text",
+      idxPath)
+    val streamDocs = docs.filter(col("doc_id") >= refCut)
+      .withColumn("__b", (col("doc_id") % StreamBatches).cast("int")).persist()
+    val nStream = streamDocs.count()
+    val probeDocs = streamDocs.filter(col("__b") === 0).drop("__b")
+    val docDir = s"$work/docs"
+    val crawlOut = s"$work/crawl_out"
+    land(streamDocs, docDir, 0)
+    var takedownSecs = 0.0
+    // victims kept on the driver (~1% of kept per takedown): an
+    // interleaved compact applies and removes the tombstone relation
+    val deletedIds = mutable.ArrayBuffer.empty[Long]
+    val t1 = System.nanoTime()
+    val dq = EventWindows.dedupAgainstIndexSink(
+      spark.readStream.schema(docs.schema).parquet(docDir),
+      idxPath, "text", crawlOut, s"$work/crawl_ckpt",
+      compactEvery = compactEvery)
+    try {
+      dq.processAllAvailable()
+      for (i <- 1 until StreamBatches) {
+        land(streamDocs, docDir, i); dq.processAllAvailable()
+        if (takedownEvery > 0 && i % takedownEvery == 0) {
+          val tT = System.nanoTime()
+          // deterministic ~1% of the kept-so-far docs; the residue
+          // rotates per batch so victims spread across the corpus
+          val victims = spark.read.parquet(crawlOut)
+            .filter(pmod(col("doc_id"), lit(97L)) === (i % 97))
+            .select("doc_id")
+          Dedup.deleteFromRefIndex(spark, idxPath, victims)
+          deletedIds ++= victims.collect().map(_.getLong(0))
+          takedownSecs += (System.nanoTime() - tT) / 1e9
+        }
+      }
+    } finally dq.stop()
+    val dedupSecs = (System.nanoTime() - t1) / 1e9
+    val kept = spark.read.parquet(crawlOut).count()
+    // takedown parity (q163's oracle contract at crawl scale and cadence)
+    val takedownParity = takedownEvery == 0 || {
+      def rows(df: DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .sortBy(t => (t._1, t._2)).toSeq
+      import spark.implicits._
+      val survivors = docs.filter(col("doc_id") < refCut)
+        .unionByName(spark.read.parquet(crawlOut)
+          .select(col("doc_id"), col("text")))
+        .join(deletedIds.toSeq.toDF("doc_id"), Seq("doc_id"), "left_anti")
+      rows(Dedup.minhashAgainstIndex(probeDocs, idxPath, "text")) ==
+        rows(Dedup.minhashAgainst(probeDocs, survivors, "doc_id", "text"))
+    }
+
+    // ---------- epilogue: compact the index the crawl grew (appends add
+    // up to one file per touched bucket per batch)
+    def idxFiles(): Long = Seq(Dedup.LshBandsDir, Dedup.LshShinglesDir)
+      .map { d =>
+        val st = Files.walk(Paths.get(idxPath, d))
+        try st.filter(_.toString.endsWith(".parquet")).count()
+        finally st.close()
+      }.sum
+    def probeSecs(): Double = {
+      val t = System.nanoTime()
+      Dedup.minhashAgainstIndex(probeDocs, idxPath, "text").count()
+      (System.nanoTime() - t) / 1e9
+    }
+    val filesBefore = idxFiles()
+    val probeBefore = probeSecs()
+    val tC = System.nanoTime()
+    Dedup.compactRefIndex(spark, idxPath)
+    val compactSecs = (System.nanoTime() - tC) / 1e9
+    val filesAfter = idxFiles()
+    val probeAfter = probeSecs()
+    streamDocs.unpersist()
+
+    s"""{"metric":"stream_total","value":${funnelSecs + dedupSecs},""" +
+    s""""unit":"sec","batches":$StreamBatches,""" +
+    s""""funnel":{"rows":$nEvents,"secs":$funnelSecs,""" +
+    s""""rows_per_sec":${(nEvents / funnelSecs).round},""" +
+    s""""out_rows":$funnelOut,"state_rows_max":$stateMax},""" +
+    s""""dedup":{"rows":$nStream,"secs":$dedupSecs,""" +
+    s""""rows_per_sec":${(nStream / dedupSecs).round},""" +
+    s""""kept":$kept},""" +
+    s""""takedown":{"every":$takedownEvery,"deleted":${deletedIds.size},""" +
+    s""""secs":$takedownSecs,"probe_parity":$takedownParity},""" +
+    s""""compact":{"every":$compactEvery,"files_before":$filesBefore,""" +
+    s""""files_after":$filesAfter,"secs":$compactSecs,""" +
+    s""""probe_before_secs":$probeBefore,""" +
+    s""""probe_after_secs":$probeAfter},"sf":"$sfDir"}"""
   }
 }

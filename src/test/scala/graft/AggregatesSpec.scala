@@ -18,7 +18,6 @@ class AggregatesSpec extends AnyFunSuite {
   }
 
   test("graft_sqdist / graft_dot usable from SQL after registration") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT graft_sqdist(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS sq,
         |       graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d

@@ -27,7 +27,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
 
   test("ball filter over a registered index gains a pushed cell_id IN filter") {
     IndexAwareRules.registerIndex(indexPath, spec)
-    IndexAwareRules.install(spark)
     val idx = GridIndex.readIndex(spark, indexPath)
     val query = idx.filter(
       sqDist(col("vec"), array(q.map(lit): _*)) <= lit(r * r))
@@ -51,9 +50,7 @@ class IndexAwareRulesSpec extends AnyFunSuite {
   }
 
   test("plain SQL over the saved index auto-prunes (full SQL-user path)") {
-    GraftExtensions.register(spark)
     IndexAwareRules.registerIndex(indexPath, spec)
-    IndexAwareRules.install(spark)
     val sqlDf = spark.sql(
       s"""SELECT p_partkey FROM parquet.`$indexPath`
          |WHERE graft_sqdist(vec, array(910.0D, 25.0D)) <= 400.0D
@@ -70,9 +67,7 @@ class IndexAwareRulesSpec extends AnyFunSuite {
   }
 
   test("pure SQL kNN (ORDER BY graft_sqdist LIMIT k) gets a pruned scan") {
-    GraftExtensions.register(spark)
     IndexAwareRules.registerIndex(indexPath, spec)
-    IndexAwareRules.install(spark)
     val sqlDf = spark.sql(
       s"""SELECT p_partkey FROM parquet.`$indexPath`
          |ORDER BY graft_sqdist(vec, array(910.0D, 25.0D)) LIMIT 7""".stripMargin)
@@ -93,7 +88,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
 
   test("DataFrame orderBy(sqdist).limit(k) hits the same kNN rewrite") {
     IndexAwareRules.registerIndex(indexPath, spec)
-    IndexAwareRules.install(spark)
     val idx = GridIndex.readIndex(spark, indexPath)
     val knnDf = idx.orderBy(sqDist(col("vec"), array(q.map(lit): _*)))
       .limit(5).select("p_partkey")
@@ -113,8 +107,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
     // ORDER BY graft_cosine(...) DESC LIMIT k over the saved path gets a
     // pruned scan with NO API call — and exactly Search.cosineTopK's rows
     // (the sort stays by cosine; only a superset ball filter is added).
-    GraftExtensions.register(spark)
-    IndexAwareRules.install(spark)
     val tmp = java.nio.file.Files.createTempDirectory("graft_cos").toString
     val raw = Tables.load(spark, SparkTestSession.sf0001, "part")
       .withColumn("vec", graft.functions.VectorFunctions.normalize(
@@ -147,8 +139,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
     // graft_cosine(vec, lit) >= c over a unit-norm index is the ball
     // ||v - qhat||^2 <= 2(1-c) (+pad) — PruneBallSearch ANDs the cell
     // conjunct, exact predicate still runs.
-    GraftExtensions.register(spark)
-    IndexAwareRules.install(spark)
     val tmp = java.nio.file.Files.createTempDirectory("graft_cosball").toString
     val raw = Tables.load(spark, SparkTestSession.sf0001, "part")
       .withColumn("vec", graft.functions.VectorFunctions.normalize(
@@ -186,8 +176,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
     // exact oracle for "the rule adds a filter, never changes ranking".
     // Similarity multisets are compared (no id tie-break in the SQL).
     import spark.implicits._
-    GraftExtensions.register(spark)
-    IndexAwareRules.install(spark)
     val tmp = java.nio.file.Files.createTempDirectory("graft_cosprop").toString
     val rnd = new scala.util.Random(42)
     var pruned = 0
@@ -228,9 +216,7 @@ class IndexAwareRulesSpec extends AnyFunSuite {
     // Without the unit-norm fact the reduction is unsound (orders by
     // cosine and by L2 disagree when norms vary) — the plan must stay
     // unpruned and the result correct.
-    GraftExtensions.register(spark)
     IndexAwareRules.registerIndex(indexPath, spec) // unitNorm = false
-    IndexAwareRules.install(spark)
     val sqlDf = spark.sql(
       s"""SELECT p_partkey,
          |       round(graft_cosine(vec, array(910.0D, 25.0D)), 6) AS sim
@@ -258,7 +244,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
     // conjunct would wrongly exclude true farther matches). The rewrite
     // must not fire — and the result must be the exact filtered kNN.
     IndexAwareRules.registerIndex(indexPath, spec)
-    IndexAwareRules.install(spark)
     val idx = GridIndex.readIndex(spark, indexPath)
     val knnDf = idx.filter(col("p_size") > 25)
       .orderBy(sqDist(col("vec"), array(q.map(lit): _*)))
@@ -280,7 +265,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
 
   test("self-join of an indexed scan is NOT rewritten (provenance guard)") {
     IndexAwareRules.registerIndex(indexPath, spec)
-    IndexAwareRules.install(spark)
     val idx = GridIndex.readIndex(spark, indexPath)
     val l = idx.select(col("p_partkey").as("lk"), col("vec").as("lvec"),
       col("cell_id"))
@@ -328,8 +312,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
 
   test("pure SQL kNN over a saved high-dim IVF index prunes list " +
        "partitions (the saved-index scale story)") {
-    GraftExtensions.register(spark)
-    IndexAwareRules.install(spark)
     val (df, centers) = clusteredHighDim(31)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivfsql").toString
     val path = s"$tmp/idx"
@@ -356,8 +338,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
   }
 
   test("SQL cosine top-k over a saved unit-norm IVF index prunes lists") {
-    GraftExtensions.register(spark)
-    IndexAwareRules.install(spark)
     val (df, centers) = clusteredHighDim(57, unitNorm = true)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivfcos").toString
     val path = s"$tmp/idx"
@@ -382,8 +362,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
   }
 
   test("IVF ball filter (sqdist <= r²) gains a list_id conjunct, lossless") {
-    GraftExtensions.register(spark)
-    IndexAwareRules.install(spark)
     val (df, centers) = clusteredHighDim(73)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivfball").toString
     val path = s"$tmp/idx"
@@ -406,7 +384,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
   }
 
   test("unregistered paths and non-ball filters are left untouched") {
-    IndexAwareRules.install(spark)
     val idx = GridIndex.readIndex(spark, indexPath)
     IndexAwareRules.clear() // deregister: rule must no-op now
     try {
@@ -438,7 +415,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
       .createTempDirectory("graft_idx_adpt").toString + "/idx"
     VectorIndex.create(df, "vec", "id", dim = 2, cellsPerDim = 8,
       rowCap = 50).save(tmp)
-    IndexAwareRules.install(spark)
     val re = VectorIndex.load(spark, tmp) // registers AdaptiveGeom
     val qh = Seq(10.5, 10.5) // inside the refined (hot) base cell
     val rr = 0.6
@@ -478,7 +454,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
     * lossless. */
   test("early-exit fuse composes with index pruning (both in the plan)") {
     IndexAwareRules.registerIndex(indexPath, spec)
-    IndexAwareRules.install(spark)
     val idx = GridIndex.readIndex(spark, indexPath)
     val query = idx.filter(
       sqDist(col("vec"), array(q.map(lit): _*)) <= lit(r * r))
@@ -503,7 +478,6 @@ class IndexAwareRulesSpec extends AnyFunSuite {
     * the early-exit fusion off for it on every fixpoint round. */
   test("unprunable ball over a registered index still fuses immediately") {
     IndexAwareRules.registerIndex(indexPath, spec)
-    IndexAwareRules.install(spark)
     val idx = GridIndex.readIndex(spark, indexPath)
     val computed = array(col("vec").getItem(0), col("vec").getItem(1))
     val query = idx.filter(

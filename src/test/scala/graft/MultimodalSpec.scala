@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Multimodal
@@ -7,11 +9,20 @@ import graft.operators.Multimodal
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  /** Text bytes stand in for media blobs: same plumbing, deterministic
+    * content. */
+  private def featuresFromText(docs: DataFrame): DataFrame = {
+    val media = Multimodal.asMedia(
+      docs.withColumn("blob", encode(col("text"), "UTF-8")),
+      "doc_id", "blob", format = "text/utf-8")
+    Multimodal.extractFeatures(media).toDF()
+  }
+
   test("binary-column pipeline runs partition-parallel and is deterministic") {
     val docs = Tables.load(spark, SparkTestSession.sf0001, "documents")
-    val f1 = Multimodal.featuresFromText(spark, docs)
+    val f1 = featuresFromText(docs)
       .collect().map(r => (r.getLong(0), r.getLong(3))).toMap
-    val f2 = Multimodal.featuresFromText(spark, docs.repartition(7))
+    val f2 = featuresFromText(docs.repartition(7))
       .collect().map(r => (r.getLong(0), r.getLong(3))).toMap
     assert(f1 == f2)
     assert(f1.size == docs.count())
@@ -226,29 +237,6 @@ class MultimodalSpec extends AnyFunSuite {
     val row = media.head()
     assert(row.meta.nBytes == 6) // é is 2 bytes in UTF-8
     assert(row.meta.format == "text/utf-8")
-  }
-
-  test("frame sampling: stride fan-out, byte-exact slices, no shuffle") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val docs = Tables.load(spark, SparkTestSession.sf0001, "documents")
-      .filter(col("doc_id") < 50) // not limit(): GlobalLimit adds an Exchange
-      .withColumn("blob", encode(col("text"), "UTF-8"))
-    val media = Multimodal.asMedia(docs, "doc_id", "blob", "text/utf-8")
-    val frames = Multimodal.sampleFrames(media, frameSize = 32, stride = 64)
-    val byDoc = frames.collect().groupBy(_.id)
-    val lens = media.collect().map(m => m.id -> m.blob.length).toMap
-    byDoc.foreach { case (id, fs) =>
-      val n = lens(id)
-      assert(fs.length == (n + 63) / 64) // ceil(n / stride) frames
-      fs.foreach { fr =>
-        assert(fr.nBytes == math.min(32, n - fr.offset).toInt)
-      }
-      assert(fs.map(_.frameIdx).sorted.toSeq == fs.indices.toSeq)
-    }
-    // map-only: no exchange in the plan
-    val plan = frames.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
   }
 
   /** Encode a w×h gray image with per-pixel value fn(x, y) as fmt bytes. */

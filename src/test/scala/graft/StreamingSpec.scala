@@ -8,59 +8,6 @@ import graft.streaming.EventWindows
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  test("streaming tumbling counts equal the batch computation") {
-    val dir = SparkTestSession.sf0001
-    val stream = EventWindows.readStream(spark, s"$dir/events.parquet")
-    val agg = EventWindows.streamingTumblingCounts(stream, "1 hour",
-      watermark = "1 minute")
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory").queryName("ev_counts")
-      .start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("ev_counts")
-        .select(unix_timestamp(col("wstart")).as("w"), col("event_type"),
-          col("n"), col("sum_value"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getDouble(3))).toSet
-      val batch = EventWindows.tumblingCounts(
-          Tables.events(spark, dir), "1 hour")
-        .select(unix_timestamp(col("wstart")).as("w"), col("event_type"),
-          col("n"), col("sum_value"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getDouble(3))).toSet
-      assert(streamed == batch)
-      assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join equals the batch banded interval join") {
-    val dir = SparkTestSession.sf0001
-    def sides(ev: org.apache.spark.sql.DataFrame) = (
-      ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("ts"), col("user_id")),
-      ev.filter(col("event_type") === "error")
-        .select(col("event_id"), col("ts"), col("user_id")))
-    val (sc, se) = sides(EventWindows.readStream(spark, s"$dir/events.parquet"))
-    val q = EventWindows.streamIntervalJoin(sc, se, "user_id",
-        "ts", "ts", lowerSec = 0L, upperSec = 3600L)
-      .select(col("l_event_id"), col("r_event_id"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ev_ivj").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("ev_ivj").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val (bc, be) = sides(Tables.events(spark, dir))
-      val batch = operators.RangeJoin.intervalJoin(bc, be, "user_id",
-          "ts", "ts", lowerSec = 0L, upperSec = 3600L)
-        .select(col("l_event_id"), col("r_event_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(streamed == batch && batch.nonEmpty)
-    } finally q.stop()
-  }
-
   test("streaming session windows equal the batch computation") {
     val dir = SparkTestSession.sf0001
     val stream = EventWindows.readStream(spark, s"$dir/events.parquet")
@@ -82,65 +29,6 @@ class StreamingSpec extends AnyFunSuite {
           col("user_id"), col("n"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(streamed == batch && batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessionizer equals the builtin session_window") {
-    // The custom-state path: timeout-driven emission means sessions only
-    // finalize when the watermark passes their end, so the test appends
-    // far-future sentinel events (twice — timeouts fire against the
-    // PREVIOUS batch's watermark) to flush all real sessions, then
-    // compares against the batch builtin session_window.
-    val dir = SparkTestSession.sf0001
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sess").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$tmp/ev0.parquet"))
-    def sentinel(micros: Long): Unit = {
-      import spark.implicits._
-      // ts written as a real timestamp column, matching the micros
-      // physical type of the driver's events table (readStream probes
-      // the type; appended files must agree with the probed schema)
-      Seq((9_000_000_000L, micros, -1L, "x", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .withColumn("ts", timestamp_micros(col("ts")))
-        .coalesce(1).write.mode("append").parquet(tmp)
-    }
-    val stream = EventWindows.readStream(spark, tmp)
-    val q = EventWindows.streamingSessions(stream, gapMinutes = 30,
-        watermark = "1 minute")
-      .toDF().writeStream.outputMode("append")
-      .format("memory").queryName("fs_sessions").start()
-    try {
-      q.processAllAvailable()
-      sentinel(4_000_000_000_000_000L) // ~2096: watermark jumps ahead
-      q.processAllAvailable()
-      sentinel(4_100_000_000_000_000L) // next batch: timeouts all fire
-      q.processAllAvailable()
-      val streamed = spark.table("fs_sessions")
-        .filter(col("user_id") >= 0) // drop sentinel user
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-        .toMap
-      val batch = Tables.events(spark, dir)
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n"), sum(col("value")).as("s"))
-        .select(col("user_id"),
-          unix_timestamp(col("session_window.start")).as("start"),
-          col("n"), col("s"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-        .toMap
-      assert(streamed.keySet == batch.keySet,
-        s"session keys differ: extra=${streamed.keySet -- batch.keySet} " +
-          s"missing=${batch.keySet -- streamed.keySet}")
-      streamed.foreach { case (k, (n, s)) =>
-        val (bn, bs) = batch(k)
-        assert(n == bn, s"count mismatch at $k")
-        // stream folds values in arrival order; allow float-sum slack
-        assert(math.abs(s - bs) <= 1e-6, s"sum mismatch at $k: $s vs $bs")
-      }
-      assert(batch.nonEmpty)
     } finally q.stop()
   }
 
@@ -167,48 +55,6 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
       assert(streamed == batch && batch.nonEmpty)
     } finally q.stop()
-  }
-
-  test("dedup within watermark drops re-delivered events, keeps state bounded") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dedup").toString
-    val srcDir = s"$tmp/src"
-    val events = Tables.load(spark, SparkTestSession.sf0001, "events").limit(100)
-    // simulate at-least-once delivery: every event shipped twice
-    events.union(events).write.parquet(srcDir)
-    val stream = EventWindows.readStream(spark, srcDir)
-    val q = EventWindows.dedupWithinWatermark(stream, "10 minutes")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ev_dedup")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("ev_dedup")
-      assert(got.count() == 100) // each duplicate dropped exactly once
-      assert(got.select(col("event_id")).distinct().count() == 100)
-    } finally q.stop()
-  }
-
-  test("foreachBatch incremental index append (reference insert analog)") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    // stand-in vector stream: (id, vec) derived from events
-    val srcDir = s"$tmp/src"
-    val events = Tables.events(spark, SparkTestSession.sf0001)
-      .select(col("event_id"), col("ts"),
-        array(col("value"), col("user_id").cast("double")).as("vec"),
-        col("user_id"), col("event_type"), col("props"))
-    events.limit(200).write.parquet(srcDir)
-    val spec = operators.GridIndex.GridSpec(
-      Seq(0.0, 0.0), Seq(10.0, 10.0), Seq(8, 8))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema).parquet(srcDir)
-    val q = EventWindows.appendingIndexSink(stream, spec, "vec",
-      s"$tmp/index", s"$tmp/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    val index = spark.read.parquet(s"$tmp/index")
-    assert(index.count() == 200)
-    assert(index.columns.contains("cell_id"))
   }
 
   test("streaming rolling crawl: each batch screens against AND grows " +

@@ -113,7 +113,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   test("early-exit ball filter: fused plan, identical rows to builtin " +
       "composition incl. exact-boundary distances") {
     import spark.implicits._
-    graft.plans.IndexAwareRules.install(spark)
     val rnd = new scala.util.Random(31)
     // random far/near mix + crafted EXACT-boundary pairs: sqdist == 25.0
     // precisely (3-4-0 triple), where <= keeps and < drops — the seam
@@ -154,7 +153,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   test("early-exit filter: null/mismatch rows dropped like the unfused " +
       "form; reversed operand order and lit-first comparisons fuse too") {
     import spark.implicits._
-    graft.plans.IndexAwareRules.install(spark)
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_fuse_null").toString + "/t"
     Seq(
@@ -183,7 +181,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       import spark.implicits._
-      graft.plans.IndexAwareRules.install(spark)
       val rnd = new scala.util.Random(37)
       val df = (0 until 200).map { i =>
         (i.toLong, Seq.fill(64)(rnd.nextDouble()), Seq.fill(64)(rnd.nextDouble()))
@@ -210,7 +207,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
     // trips on a NaN partial sum and would run to completion and KEEP the
     // row (round-10 advice finding). The negated keep-condition bails.
     import spark.implicits._
-    graft.plans.IndexAwareRules.install(spark)
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_fuse_nan").toString + "/t"
     Seq(

@@ -46,9 +46,15 @@ class VectorIndexSpec extends AnyFunSuite {
       .select("id").collect().map(_.getLong(0)).toSeq
     assert(ann == naive) // nProbe = nlist ⇒ exhaustive ⇒ exact
 
+    // cosine ANN: on unit vectors L2 order == cosine order, so an index
+    // over normalize(vec) probed with the unit query ranks by cosine
     import spark.implicits._
     val q2 = Seq.fill(16)(0.5)
-    val annCos = idx.annSearchCosine(q2, 5, nProbe = 8)
+    val q2Unit = { val n = math.sqrt(q2.map(x => x * x).sum); q2.map(_ / n) }
+    val unitIdx = VectorIndex.create(
+      df.withColumn("vec", graft.functions.VectorFunctions.normalize(col("vec"))),
+      "vec", "id", dim = 16, nlist = 8)
+    val annCos = unitIdx.annSearch(q2Unit, 5, nProbe = 8)
       .select("id").collect().map(_.getLong(0)).toSeq
     val naiveCos = Search.cosineTopK(df, "vec", "id",
         Seq((0L, q2)).toDF("qid", "qv"), "qv", "qid", k = 5)
